@@ -54,8 +54,11 @@ abstract class BraceExtractor extends Extractor {
     * until the block closes become the var's candidate type set.
     */
   protected def inferenceStart(line: String): Option[String] = None
-  /** Kotlin extension-property header `val Recv.prop` → (recvType, prop). */
-  protected def extensionPropertyHeader(line: String): Option[(String, String)] = None
+  /** Kotlin extension-property header `val Recv.prop` / `val Recv.prop: T`
+    * → (recvType, prop, declared type if any).
+    */
+  protected def extensionPropertyHeader(
+      line: String): Option[(String, String, Option[String])] = None
   /** `@Name` annotation-line names (attached to the next definition when
     * the language emits type facts; always excluded from the call-ref scan
     * — `#[derive(Debug)]` / `@Suppress("x")` argument lists are not call
@@ -652,7 +655,11 @@ abstract class BraceExtractor extends Extractor {
             if (line.trim.nonEmpty) pendingProp = None
           case None =>
             extensionPropertyHeader(line) match {
-              case Some((recv, prop)) => pendingProp = Some((recv, prop))
+              // a declared type types the property outright; else the
+              // getter line that follows may
+              case Some((recv, prop, Some(t))) =>
+                facts += RawTypeFact(f.path, "prop", recv, prop, t, i)
+              case Some((recv, prop, None)) => pendingProp = Some((recv, prop))
               case None =>
                 inferenceStart(line) match {
                   case Some(varName) =>
@@ -907,9 +914,11 @@ object KotlinExtractor extends BraceExtractor {
   override def inferenceStart(line: String): Option[String] =
     """\b(?:val|var)\s+(\w+)\s*=\s*(?:when\s*\(|try\s*\{|if\s*\()""".r
       .findFirstMatchIn(line).map(_.group(1))
-  override def extensionPropertyHeader(line: String): Option[(String, String)] =
-    """^\s*val\s+([A-Z][\w.]*)\.(\w+)\s*$""".r.findFirstMatchIn(line)
-      .map(m => (m.group(1), m.group(2)))
+  override def extensionPropertyHeader(
+      line: String): Option[(String, String, Option[String])] =
+    """^\s*val\s+([A-Z][\w.]*)\.(\w+)\s*(?::\s*([\w.]+)[^=]*)?$""".r
+      .findFirstMatchIn(line)
+      .map(m => (m.group(1), m.group(2), Option(m.group(3))))
   override def annotationNames(line: String): Seq[String] =
     """^\s*@([A-Za-z_]\w*)""".r.findFirstMatchIn(line).map(_.group(1)).toSeq
   // Kotlin generic-constraint clause: `class C<T> where T : Comparable<T>`

@@ -24,8 +24,14 @@ object TypeScriptExtractor extends Extractor {
     """(?:export\s+)?(?:declare\s+)?(?:namespace|module)\s+([A-Za-z_$][A-Za-z0-9_$.]*)\s*\{""".r
   private val funcRe: Regex =
     """(?:export\s+)?(?:async\s+)?function\s*\*?\s+([A-Za-z_$][A-Za-z0-9_$]*)""".r
+  // a TS return-type annotation between an arrow's param list and its
+  // `=>`: `(value: string): boolean =>`
+  private val arrowReturn = """(?:\s*:\s*[^=;{}]+?)?"""
   private val arrowRe: Regex =
-    """(?:export\s+)?(?:const|let|var)\s+([A-Za-z_$][A-Za-z0-9_$]*)\s*(?::[^=]+)?=\s*(?:async\s+)?(?:\((?:[^()]|\([^()]*\))*\)|[A-Za-z_$][A-Za-z0-9_$]*)\s*=>""".r
+    ("""(?:export\s+)?(?:const|let|var)\s+([A-Za-z_$][A-Za-z0-9_$]*)\s*(?::[^=]+)?=\s*(?:async\s+)?(?:\((?:[^()]|\([^()]*\))*\)""" +
+      arrowReturn + """|[A-Za-z_$][A-Za-z0-9_$]*)\s*=>""").r
+  // from a multi-line arrow head's close paren through its `=>`
+  private val arrowTailRe: Regex = (arrowReturn + """\s*=>""").r
   private val methodRe: Regex =
     """^\s*(?:public\s+|private\s+|protected\s+|static\s+|async\s+|readonly\s+|get\s+|set\s+)*(?:\*\s*)?([A-Za-z_$][A-Za-z0-9_$]*)\s*\([^;]*\)\s*(?::[^{;]+)?\{""".r
   // multi-line member head: `async load ({` — params continue on following
@@ -150,14 +156,14 @@ object TypeScriptExtractor extends Extractor {
         if (closeIdx >= 0) {
           pendingArrow = None
           val after = line.substring(closeIdx + 1)
-          val pastSpaces = after.dropWhile(_ == ' ')
-          if (pastSpaces.startsWith("=>")) {
+          val tail = arrowTailRe.findPrefixMatchOf(after)
+          if (tail.isDefined) {
             val kind = if (inClassScope) "Method" else "Function"
             defs += RawDefinition(f.path, fqnOf(name), name, kind,
               lineStart(headLine) + headCol,
               lineStart(headLine) + rawLines(headLine).length,
               headLine, headLine, headCol, rawLines(headLine).length)
-            val rest = closeIdx + 1 + (after.length - pastSpaces.length) + 2
+            val rest = closeIdx + 1 + tail.get.end
             defLine = (" " * rest) + line.substring(rest)
           } else
             defLine = (" " * (closeIdx + 1)) + after

@@ -52,9 +52,13 @@ class ExtractorFidelitySpec extends SparkSpec {
     // callers with arbitrary same-id definitions — the round-4 measurement
     // did exactly that, and the resulting symmetric garbage (a bogus miss
     // plus a bogus extra per divergent tie) understated fidelity as
-    // 88.8/92.5 when the true call-pair parity was near-perfect
+    // 88.8/92.5 when the true call-pair parity was near-perfect. Both ends
+    // are restricted to Scala definitions, like hDefs: the corpus also
+    // holds the Kotlin/TS/Ruby fixture trees, whose calls scalac never sees
     def callPairs(store: graft.store.GraphStore): Set[(String, String)] = {
-      val d = store.definitions.select(col("id"), col("fqn"))
+      val d = store.definitions
+        .where(col("primary_file_path").endsWith(".scala"))
+        .select(col("id"), col("fqn"))
       store.edges.where(col("type").isin(RelType.callTypes: _*) &&
           col("kind") === graft.model.EdgeKind.DefToDef)
         .join(d.select(col("id").as("sid"), col("fqn").as("src")),

@@ -23,8 +23,11 @@ object FidelityDiag {
       val truth = Indexer.fromParsed(spark,
         metas.toDF(), defs.toDF(), imps.toDF(), refs.toDF())
 
+      // Scala definitions only, as in ExtractorFidelitySpec
       def callPairs(store: graft.store.GraphStore): Set[(String, String)] = {
-        val d = store.definitions.select(col("id"), col("fqn"))
+        val d = store.definitions
+          .where(col("primary_file_path").endsWith(".scala"))
+          .select(col("id"), col("fqn"))
         store.edges.where(col("type").isin(RelType.callTypes: _*) &&
             col("kind") === graft.model.EdgeKind.DefToDef)
           .join(d.select(col("id").as("sid"), col("fqn").as("src")),

@@ -3,18 +3,27 @@ package graft.extract
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kotlin extractor fidelity: EXACT hand-annotated definition census over
-  * the COMPLETE reference Kotlin fixture corpus (all 17 .kt files of
-  * /root/reference/fixtures/kotlin — 248 lines).
+  * the Kotlin fixture tree kept in this repo
+  * (src/test/resources/fixtures/kotlin — 17 .kt files, 227 lines).
+  *
+  * The tree is original, not the reference's fixture bytes: each file was
+  * written from its (file, kind, fqn) rows below and the constructs these
+  * notes name, before the extractor was run on it. It holds an enum class
+  * with entries, companion objects, an inner class, three-deep nested
+  * classes, `operator fun`, extension functions, the extension properties
+  * `val ExtendMe.extend` and `val ExtendMe.reversed`, interface methods
+  * (abstract and default), a top-level property, and packages whose last
+  * segment is the soft keyword `if`, `try` or `when`. Those segments are
+  * written bare, the form the extractor's package rule reads; kotlinc
+  * would reject them and needs backticks (`` package com.example.`if` ``).
   *
   * No Kotlin parser exists on this box (no kotlinc, no embeddable K2, no
   * tree-sitter CLI, empty cargo registry, zero egress — probes recorded in
-  * COVERAGE.md), so the ground truth here is MANUAL: every (fqn, kind) row
-  * below was derived by reading the fixture sources, independently of the
-  * extractor, following the reference's kotlin analyzer taxonomy
-  * (analysis/languages/kotlin/types.rs) restricted to the kinds our
-  * definition model carries (Class / Interface / Method / Function).
-  * Asserted EXACTLY in both directions — any missed definition (recall)
-  * or fabricated one (precision) fails.
+  * COVERAGE.md), so the ground truth here is MANUAL, following the
+  * reference's kotlin analyzer taxonomy (analysis/languages/kotlin/types.rs)
+  * restricted to the kinds our definition model carries (Class / Interface
+  * / Method / Function). Asserted EXACTLY in both directions — any missed
+  * definition (recall) or fabricated one (precision) fails.
   *
   * Taxonomy notes, deliberate and documented:
   *  - Kotlin properties (`val logger`, extension properties
@@ -22,13 +31,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *    as RawTypeFacts feeding the typed resolver, not as definition rows;
   *    the reference's own call fixtures that flow through them (enum-entry
   *    method calls, extension-property chains) are asserted in
-  *    ReferenceFixturesSpec's 24-edge Kotlin call parity.
+  *    ReferenceFixturesSpec's 24-edge Kotlin call parity, which needs the
+  *    reference checkout.
   *  - `enum class` lowers to Class, `companion object` to a nested Class
   *    named Companion (matching Kotlin's real JVM lowering).
   */
 class KotlinFixtureCensusSpec extends AnyFunSuite {
 
-  private val root = java.nio.file.Paths.get("/root/reference/fixtures/kotlin")
+  private lazy val root = graft.TestFixtures.root("kotlin")
 
   // (file, kind, fqn) — hand-derived from the fixture sources
   private val truth: Seq[(String, String, String)] = {

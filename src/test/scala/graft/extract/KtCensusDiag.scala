@@ -1,12 +1,14 @@
 package graft.extract
 
 /** Diagnostic dump (not a test): prints the Kotlin extractor's definitions
-  * for every reference Kotlin fixture, for building the hand-annotated
-  * census. Run with `sbt "Test/runMain graft.extract.KtCensusDiag"`.
+  * and imports for every file of the Kotlin fixture tree
+  * (src/test/resources/fixtures/kotlin), for checking it against the
+  * hand-annotated census. Run with
+  * `sbt "Test/runMain graft.extract.KtCensusDiag"`.
   */
 object KtCensusDiag {
   def main(args: Array[String]): Unit = {
-    val root = java.nio.file.Paths.get("/root/reference/fixtures/kotlin")
+    val root = graft.TestFixtures.root("kotlin")
     import scala.jdk.CollectionConverters._
     val s = java.nio.file.Files.walk(root)
     try {

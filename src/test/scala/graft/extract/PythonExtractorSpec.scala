@@ -100,6 +100,10 @@ class OtherExtractorsSpec extends AnyFunSuite {
         |}
         |export function helper(x: number) { return x + 1; }
         |const fmt = (s: string) => s.trim();
+        |const valid = (s: string): boolean => s.length > 0;
+        |const load = async (
+        |  id: string,
+        |): Promise<string> => readIt(id)
         |""".stripMargin)
     val e = TypeScriptExtractor.extract(f)
     val fqns = e.definitions.map(d => d.fqn -> d.definitionType).toMap
@@ -108,6 +112,9 @@ class OtherExtractorsSpec extends AnyFunSuite {
     assert(fqns.contains("Svc.run"))
     assert(fqns.contains("helper"))
     assert(fqns.contains("fmt"))
+    // arrow consts with a return-type annotation, one- and multi-line
+    assert(fqns("valid") == "Function")
+    assert(fqns("load") == "Function")
     assert(e.imports.map(_.importType).toSet ==
       Set("named_import", "namespace_import", "side_effect_import"))
     assert(e.references.exists(_.name == "helper"))
@@ -207,6 +214,10 @@ class OtherExtractorsSpec extends AnyFunSuite {
         |    fun lookup(k: String) = items.get(k)
         |}
         |fun topLevel() { }
+        |val Point.mirrored
+        |    get() = Point(y, x)
+        |val Point.origin: Point
+        |    get() = zero()
         |""".stripMargin)
     val e = KotlinExtractor.extract(f)
     val fqns = e.definitions.map(d => d.fqn -> d.definitionType).toMap
@@ -215,6 +226,12 @@ class OtherExtractorsSpec extends AnyFunSuite {
     assert(fqns("Registry") == "Class")
     assert(fqns("Registry.lookup") == "Method")
     assert(fqns.contains("topLevel"))
+    // extension properties are typed by their getter's constructor call or,
+    // when declared, by their declared type
+    val props = e.typeFacts.filter(_.factKind == "prop")
+      .map(t => (t.scope, t.subject, t.detail)).toSet
+    assert(props == Set(("Point", "mirrored", "Point"),
+      ("Point", "origin", "Point")), props.toString)
     assert(e.imports.exists(i => i.alias == "F"))
     assert(e.imports.exists(_.importType == "wildcard_import"))
   }

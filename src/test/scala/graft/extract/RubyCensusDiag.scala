@@ -1,14 +1,14 @@
 package graft.extract
 
 /** Diagnostic dump (not a test): prints the Ruby extractor's definitions
-  * for every file of the reference's ruby-references fixture tree, for
-  * building the hand-annotated census. Run with
+  * for every file of the ruby-references fixture tree
+  * (src/test/resources/fixtures/ruby-references), for checking it against
+  * the hand-annotated census. Run with
   * `sbt "Test/runMain graft.extract.RubyCensusDiag"`.
   */
 object RubyCensusDiag {
   def main(args: Array[String]): Unit = {
-    val root =
-      java.nio.file.Paths.get("/root/reference/fixtures/ruby-references")
+    val root = graft.TestFixtures.root("ruby-references")
     import scala.jdk.CollectionConverters._
     val s = java.nio.file.Files.walk(root)
     try {

@@ -3,16 +3,20 @@ package graft.extract
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ruby extractor fidelity: EXACT hand-annotated definition census over
-  * the COMPLETE ruby-references fixture tree
-  * (/root/reference/fixtures/ruby-references — 7 .rb files, the corpus
-  * whose 24 call-resolution edges ruby/tests.rs:96-425 asserts and
-  * ReferenceFixturesSpec replays).
+  * the ruby-references fixture tree kept in this repo
+  * (src/test/resources/fixtures/ruby-references — 7 .rb files, 374 lines).
+  *
+  * The tree is original, not the reference's fixture bytes: each file was
+  * written from its (file, kind, fqn) rows below and the constructs these
+  * notes name, before the extractor was run on it. Its layout follows the
+  * reference's ruby-references tree, but the 24 call-resolution edges
+  * ruby/tests.rs:96-425 asserts belong to the reference's own call sites;
+  * ReferenceFixturesSpec replays those on the reference checkout only.
   *
   * No Ruby interpreter exists on this box (no ruby, no tree-sitter CLI —
-  * probes recorded in COVERAGE.md), so the ground truth is MANUAL: every
-  * (file, kind, fqn) row below was derived by reading the fixture sources,
-  * independently of the extractor. Asserted EXACTLY in both directions —
-  * any missed definition (recall) or fabricated one (precision) fails.
+  * probes recorded in COVERAGE.md), so the ground truth is MANUAL.
+  * Asserted EXACTLY in both directions — any missed definition (recall)
+  * or fabricated one (precision) fails.
   *
   * Taxonomy notes (documented divergences from the reference's Ruby
   * analyzer, analysis/languages/ruby/):
@@ -23,12 +27,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `attr_reader`/`attr_accessor` synthesized accessors are not
   *    definition rows (they surface as resolvable names via type facts);
   *  - `before_action`/`validates` macro calls are references, never defs;
+  *  - a top-level `if __FILE__ == $0 … end` guard is not a def and must
+  *    not unbalance the `end`s;
   *  - method names keep Ruby's `!`/`?` suffixes (`activate!`).
   */
 class RubyFixtureCensusSpec extends AnyFunSuite {
 
-  private val root =
-    java.nio.file.Paths.get("/root/reference/fixtures/ruby-references")
+  private lazy val root = graft.TestFixtures.root("ruby-references")
 
   // (file, kind, fqn) — hand-derived from the fixture sources
   private val truth: Seq[(String, String, String)] = Seq(

@@ -1,14 +1,14 @@
 package graft.extract
 
 /** Diagnostic dump (not a test): prints the TypeScript extractor's
-  * definitions for every reference TS fixture, for building the
-  * hand-annotated census. Run with
+  * definitions and imports for every file of the TS fixture tree
+  * (src/test/resources/fixtures/typescript/test-repo), for checking it
+  * against the hand-annotated census. Run with
   * `sbt "Test/runMain graft.extract.TsCensusDiag"`.
   */
 object TsCensusDiag {
   def main(args: Array[String]): Unit = {
-    val root =
-      java.nio.file.Paths.get("/root/reference/fixtures/typescript/test-repo")
+    val root = graft.TestFixtures.root("typescript/test-repo")
     import scala.jdk.CollectionConverters._
     val s = java.nio.file.Files.walk(root)
     try {

@@ -3,19 +3,27 @@ package graft.extract
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TypeScript extractor fidelity: EXACT hand-annotated definition census
-  * over the COMPLETE reference TS fixture corpus (all 5 .ts files of
-  * /root/reference/fixtures/typescript/test-repo).
+  * over the TS fixture tree kept in this repo
+  * (src/test/resources/fixtures/typescript/test-repo — 5 .ts files,
+  * 488 lines).
+  *
+  * The tree is original, not the reference's fixture bytes: each file was
+  * written from its (file, kind, fqn) rows below and the constructs these
+  * notes name, before the extractor was run on it. It holds namespaces
+  * (one nested in another), constructors, get-accessors, constructors and
+  * static methods whose object-type parameter annotations are
+  * `;`-separated, an arrow-function const with a return-type annotation,
+  * namespace-level `const`/`let` bindings, and 9 imported symbols, 3 of
+  * them in main.ts.
   *
   * No TypeScript parser exists on this box (no tsc, no tree-sitter CLI;
   * acorn parses only the JS subset — probes recorded in COVERAGE.md), so
-  * the ground truth is MANUAL: every (file, kind, fqn) row below was
-  * derived by reading the fixture sources, independently of the extractor.
-  * The derivation is CROSS-CHECKED against the reference's own indexed
-  * census: the reference's e2e test asserts 84 DefinitionNodes for this
-  * exact repo and 32 for the two model files (indexer/src/tests.rs:207-212,
-  * 239-244) — this census lists 84 rows, 32 of them in app/models/, so the
-  * manual count and the reference's tree-sitter count agree globally AND on
-  * the asserted file subset. Asserted EXACTLY in both directions — any
+  * the ground truth is MANUAL. The reference's e2e test asserts 84
+  * DefinitionNodes for its own TS test-repo, 32 of them in the two model
+  * files, and 9 ImportedSymbolNodes, 3 in main.ts (indexer/src/tests.rs:
+  * 207-212, 239-244, 254-267). On this tree those counts are targets the
+  * tree was written to meet, not an independent cross-check of the hand
+  * count against tree-sitter. Asserted EXACTLY in both directions — any
   * missed definition (recall) or fabricated one (precision) fails.
   *
   * Taxonomy notes (reference semantics):
@@ -26,12 +34,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    model-file count only works with both constructors included);
   *  - get-accessors are Methods (fullName/displayName);
   *  - namespace-level `const`/`let` bindings without an arrow function
-  *    (MAX_LOGIN_ATTEMPTS, providers, tokens) are not definitions.
+  *    (MAX_LOGIN_ATTEMPTS, providers, tokens) are not definitions; one
+  *    bound to an arrow function (validateToken) is a Function.
   */
 class TsFixtureCensusSpec extends AnyFunSuite {
 
-  private val root = java.nio.file.Paths
-    .get("/root/reference/fixtures/typescript/test-repo")
+  private lazy val root = graft.TestFixtures.root("typescript/test-repo")
 
   // (file, kind, fqn) — hand-derived from the fixture sources
   private val truth: Seq[(String, String, String)] = Seq(
