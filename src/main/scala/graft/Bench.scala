@@ -16,37 +16,7 @@ object Bench {
     val only = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Round-13 measured NON-change (OPTIMIZATION_r13.md): lowering
-      // spark.sql.adaptive.coalescePartitions.minPartitionSize to 64k
-      // un-serializes the CPU-heavy text gates (AQE's byte-based
-      // coalescing collapses their few-MB shuffles to 1-2 tasks:
-      // dd_containment_prefix 9.7 -> 2.9 s) but costs MORE across the
-      // ~100 small and iterative gates (extra tiny tasks per round;
-      // g_kcore +3.7 s, full bench +9 s net), so the session keeps
-      // Spark's default floor. SPARK_GRAFT_MIN_PARTITION_SIZE overrides
-      // for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      // Round-13: the driver-side codegen class cache defaults to 100
-      // entries (static conf) — this suite compiles thousands of distinct
-      // whole-stage classes per pass, so the LRU thrashes and every gate's
-      // SECOND pass (usually the reported min) re-pays Janino compilation
-      // for each stage. Tens of MB of driver memory buys compile-once.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // ContextCleaner reclaims broadcasts/shuffle state only on GC; with a
-      // 48g heap GC barely runs, so ~70 queries of state pile up and the
-      // eventual full GC lands mid-measurement on late queries. The default
-      // periodic-GC interval is 30min — far longer than the whole run.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, "graft-bench")
     graft.functions.VectorExpressions.register(spark)
 
     // warm: build + materialize the graph-store and GraphX caches once —

@@ -65,6 +65,8 @@ object GraphHttpServer {
     "DefinitionNode" -> "definition", "ImportedSymbolNode" -> "imported_symbol")
   private val KindToType = NodeTypes.map(_.swap)
 
+  private val serverIds = new java.util.concurrent.atomic.AtomicInteger(0)
+
   def main(args: Array[String]): Unit = {
     val storeDir = args.headOption.getOrElse(
       sys.error("usage: graft.GraphHttpServer <storeDir> [port] [workspace] [project]"))
@@ -99,6 +101,11 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
   private var boundPort: Int = 0
   private val closing = new java.util.concurrent.atomic.AtomicBoolean(false)
   private var streamListener: org.apache.spark.sql.streaming.StreamingQueryListener = _
+  private var pool: java.util.concurrent.ExecutorService = _
+
+  /** Name prefix of this server's request threads (unique per instance). */
+  private[graft] val threadNamePrefix =
+    s"graft-http-${serverIds.incrementAndGet()}-"
 
   /** Serving-layer event bus + workspace registry (reference: AppState's
     * event_bus + workspace_manager shared across endpoints).
@@ -150,7 +157,10 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
     // without an executor the JDK server dispatches on a single thread;
     // SparkSession is thread-safe, so concurrent requests can run as
     // concurrent Spark jobs (scheduled FIFO by the DAG scheduler)
-    httpServer.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    val threadIds = new java.util.concurrent.atomic.AtomicInteger(0)
+    pool = java.util.concurrent.Executors.newFixedThreadPool(8,
+      (r: Runnable) => new Thread(r, threadNamePrefix + threadIds.incrementAndGet()))
+    httpServer.setExecutor(pool)
     httpServer.start()
     boundPort = httpServer.getAddress.getPort
     boundPort
@@ -161,6 +171,12 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
     workspaceManager.shutdown()
     if (streamListener != null) spark.streams.removeListener(streamListener)
     if (httpServer != null) httpServer.stop(0)
+    if (pool != null) {
+      // SSE handlers see `closing` within one 250 ms poll and return
+      pool.shutdown()
+      if (!pool.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS))
+        pool.shutdownNow()
+    }
   }
 
   /** `GET /events` — the SSE push channel (events.rs:45-84): an immediate

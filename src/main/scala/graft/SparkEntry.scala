@@ -2290,8 +2290,8 @@ object SparkEntry {
     // vectors a query touches, residual PQ codes bound WHAT is read per
     // touched vector): same recall-bound contract. Both index stages are
     // deterministic (id-order seeding), so the measured recall is a
-    // constant; params from the measured curve (Round9Probe ivfpqrecall,
-    // SCALE.md round 9).
+    // constant; params from the measured curve (SCALE.md round 9 "IVF-PQ
+    // ANN recall calibration").
     q("ann_ivfpq_topk", s"""$vnSql
       SELECT 'ivfpq' AS algo, CAST(5 AS INT) AS k,
         CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
@@ -2510,8 +2510,8 @@ object SparkEntry {
         CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
       FROM vn WHERE vec_id < 100 AND nrm > 0 ORDER BY algo""") { (s, d) =>
       val embs = s.read.parquet(s"$d/embeddings.parquet")
-      // params from the measured recall curve (Round9Probe pqrecall,
-      // SCALE.md round 9): (8,32,192) -> 0.99 at sf0.01; bound 0.9
+      // params from the measured recall curve (SCALE.md round 9 "PQ ANN
+      // recall calibration"): (8,32,192) -> 0.99 at sf0.01; bound 0.9
       val approx = Similarity.pqTopK(embs, "vec_id", "embedding", k = 5,
         m = 8, ksub = 32, lloydIters = 2, rerank = 192,
         queryFilter = col("vid") < 100,

@@ -32,19 +32,23 @@ object TypeScriptExtractor extends Extractor {
       arrowReturn + """|[A-Za-z_$][A-Za-z0-9_$]*)\s*=>""").r
   // from a multi-line arrow head's close paren through its `=>`
   private val arrowTailRe: Regex = (arrowReturn + """\s*=>""").r
+  // a generic member's type-parameter list between its name and `(`:
+  // `find<T>(`, `map<K, V extends Map<K, V>>(` (one level of nesting)
+  private val memberHead =
+    """^\s*(?:public\s+|private\s+|protected\s+|static\s+|async\s+|readonly\s+|get\s+|set\s+)*(?:\*\s*)?([A-Za-z_$][A-Za-z0-9_$]*)(?:\s*<(?:[^<>()]|<[^<>()]*>)*>)?"""
   private val methodRe: Regex =
-    """^\s*(?:public\s+|private\s+|protected\s+|static\s+|async\s+|readonly\s+|get\s+|set\s+)*(?:\*\s*)?([A-Za-z_$][A-Za-z0-9_$]*)\s*\([^;]*\)\s*(?::[^{;]+)?\{""".r
+    (memberHead + """\s*\([^;]*\)\s*(?::[^{;]+)?\{""").r
   // multi-line member head: `async load ({` — params continue on following
   // lines, so there is no close paren (let alone `{`) on the header line.
   // Only meaningful at a class's DIRECT body depth, where statements cannot
   // occur (anything `name (…` there IS a member declaration).
   private val methodHeadOpenRe: Regex =
-    """^\s*(?:public\s+|private\s+|protected\s+|static\s+|async\s+|readonly\s+|get\s+|set\s+)*(?:\*\s*)?([A-Za-z_$][A-Za-z0-9_$]*)\s*\([^;()]*$""".r
+    (memberHead + """\s*\([^;()]*$""").r
   // relaxed class-body member head (fallback when methodRe's `;`-free param
   // constraint fails on object-type annotations): name + open paren only;
   // the caller additionally requires class-body depth and a `{`-ended line
   private val methodRelaxedRe: Regex =
-    """^\s*(?:public\s+|private\s+|protected\s+|static\s+|async\s+|readonly\s+|get\s+|set\s+)*(?:\*\s*)?([A-Za-z_$][A-Za-z0-9_$]*)\s*\(""".r
+    (memberHead + """\s*\(""").r
   // `name (args) {` in statement position is a syntax error in JS unless it
   // is an object-literal/class method definition — so outside a class's
   // direct body depth it marks an OBJECT method: not a definition the
@@ -328,8 +332,11 @@ object RubyExtractor extends Extractor {
     """^(\s*)class\s+([A-Z][A-Za-z0-9_:]*)(?:\s*<\s*([A-Za-z0-9_:]+))?""".r
   private val defRe: Regex = """^(\s*)def\s+(self\.)?([A-Za-z_][A-Za-z0-9_?!=]*)""".r
   private val requireRe: Regex = """^\s*require(_relative)?\s+['"]([^'"]+)['"]""".r
+  // an `end`-closed block opener, bare or as an assignment's value
+  // (`target = case kind`, `@x ||= begin`): its `end` pops this block, not
+  // the enclosing def
   private val blockOpenRe: Regex =
-    """^\s*(?:if|unless|while|until|case|begin|do)\b""".r
+    """^\s*(?:(?:@{1,2}|\$)?[a-z_][A-Za-z0-9_]*\s*(?:\|\||&&|[-+*/])?=\s*)?(?:if|unless|while|until|case|begin|do)\b""".r
   private val callRe: Regex =
     """(?:([A-Za-z_@][A-Za-z0-9_.@]*)\.)?([a-z_][A-Za-z0-9_?!]*)\s*\(""".r
   // assignment: `x = rhs` / `@ivar = rhs` / `x ||= rhs` — feeds the typed

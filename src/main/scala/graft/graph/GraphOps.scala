@@ -622,9 +622,10 @@ object GraphOps {
   }
 
   /** Exact triangle total over the kind-tagged edge table — the census
-    * [[doulionEstimate]] approximates. Exposed for error-audit probes
-    * (tools.TriangleProbe measures estimator-vs-census cost and error at
-    * sf1); the production-scale entry point is the estimator.
+    * [[doulionEstimate]] approximates. Exposed for error audits
+    * (estimator-vs-census cost and error at sf1: SCALE.md round 7
+    * "Estimator-only DOULION face"); the production-scale entry point is
+    * the estimator.
     */
   def exactTriangleCount(edges: DataFrame): Long =
     enumerateTriangles(canonicalUndirected(edges)).count()

@@ -24,16 +24,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object LocalCp {
 
-  /** Measurement-protocol escape hatch: GRAFT_FREE_CHECKPOINTS=0 turns
-    * freeing off so scale probes can A/B the accumulate-vs-free loop cost
-    * in one session (cross-session comparisons confound with box state).
-    */
-  private val enabled = sys.env.getOrElse("GRAFT_FREE_CHECKPOINTS", "1") != "0"
-
-  def free(ds: Dataset[_]): Unit = if (enabled) {
+  def free(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed.collectLeaves().foreach {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
-  }
 }

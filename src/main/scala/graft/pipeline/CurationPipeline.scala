@@ -106,11 +106,12 @@ object CurationPipeline {
       // its bytes instead: ~8 MB per partition, floor 8 (CPU-dense text
       // stages want parallelism even on KB inputs — swept 4/8/16 at sf0.1:
       // steady-state admission 10.2/8.3/9.3 s; 8 wins), never above the
-      // session value. Only active below thresholdBytes, so a real
-      // corpus-scale batch keeps the session layout AND its AQE re-plans.
-      val sizedP = math.max(8L, math.min(
-        scala.util.Try(beforeP.toLong).getOrElse(8L),
-        est.map(b => (b / (8L << 20)).toLong + 1).getOrElse(8L))).toString
+      // session value (a session under 8 partitions keeps its own). Only
+      // active below thresholdBytes, so a real corpus-scale batch keeps
+      // the session layout AND its AQE re-plans.
+      val bytesP = est.map(b => (b / (8L << 20)).toLong + 1).getOrElse(8L)
+      val sizedP = math.min(scala.util.Try(beforeP.toLong).getOrElse(8L),
+        math.max(8L, bytesP)).toString
       spark.conf.set(pKey, sizedP)
       try f finally {
         spark.conf.set(key, before)

@@ -415,9 +415,10 @@ object Dedup {
     * twin of [[Similarity.lshPlanFor]], prompted by the same measurement:
     * FIXED banding (128 hashes, 32 bands of 4 rows) measured 24× per
     * decade at the sf10 second decade, because the background term —
-    * C(n,2) · bands · bgJaccard^rowsPerBand random collisions (Round9Probe
-    * minhashvol: candidate pairs 178k → 12.4M for 10× docs, max bucket
-    * population 54 → 480) — is quadratic in n at any fixed rowsPerBand.
+    * C(n,2) · bands · bgJaccard^rowsPerBand random collisions (SCALE.md
+    * round 9 "The 24× investigated": candidate pairs 178k → 12.4M for 10×
+    * docs, max bucket population 54 → 480) — is quadratic in n at any
+    * fixed rowsPerBand.
     *
     * The plan grows ROWS PER BAND with the corpus until the expected
     * background candidate volume is back under `budgetPerDoc` pairs per

@@ -202,8 +202,8 @@ final class DedupIndexStore(val dir: String, spark: SparkSession) {
     * OWN key-partitioned file set, so after N admissions a (band, key) join
     * reads ~N small files per key cluster and the scan's file-open overhead
     * grows with history — the offline compaction the scaladoc deferred,
-    * measured by tools.IncrementalBench's appends mode. Each table rewrite
-    * publishes a new GENERATION ([[StoreCompaction.swapIn]]), so readers
+    * measured in SCALE.md round 7 "Persisted-index compaction". Each table
+    * rewrite publishes a new GENERATION ([[StoreCompaction.swapIn]]), so readers
     * racing the compaction keep scanning their resolved generation
     * untouched.
     *
@@ -599,7 +599,8 @@ private[store] object StoreCompaction {
     * (~shuffle-partition files per touched partition), so the key-
     * clustered-files property a fresh build has degrades FOREVER under
     * append-only use — file-open overhead per query grows linearly with
-    * admission count (measured: tools.IncrementalBench appends mode) and
+    * admission count (measured: SCALE.md round 7 "Persisted-index
+    * compaction") and
     * nothing else in a long-running ingest loop ever restores it. At 512
     * files (≈16 admissions at 32 shuffle partitions) the one-off rewrite
     * amortizes to a small fraction of the admissions it pays for. 0

@@ -196,19 +196,20 @@ object IncrementalIndexer {
     * (`fbucket = charFold(file) % nBuckets`), so a batch touching k files
     * rewrites at most k buckets, not the whole table — the scalable
     * replacement for the reference's DETACH DELETE + MAX(id)+1 re-insert
-    * (mutation/changes.rs:57-192).
+    * (mutation/changes.rs:57-192). The dynamic mode is a per-write option:
+    * setting it on the session would leave every later `partitionBy`
+    * overwrite (e.g. `GraphStore.write`'s edge kinds) keeping stale
+    * partitions.
     */
-  def overwriteChangedPartitions(spark: org.apache.spark.sql.SparkSession,
-      fresh: GraphStore, dir: String, nBuckets: Int = 256): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    def bucketed(df: DataFrame, fileCol: String) = df.withColumn("fbucket",
-      pmod(graft.functions.TextFunctions.charFold(col(fileCol)), lit(nBuckets)))
-    bucketed(fresh.definitions, "primary_file_path")
-      .write.mode("overwrite").partitionBy("fbucket")
-      .parquet(s"$dir/definition_nodes_bucketed")
-    bucketed(fresh.importedSymbols, "file_path")
-      .write.mode("overwrite").partitionBy("fbucket")
-      .parquet(s"$dir/imported_symbol_nodes_bucketed")
+  def overwriteChangedPartitions(fresh: GraphStore, dir: String,
+      nBuckets: Int = 256): Unit = {
+    def write(df: DataFrame, fileCol: String, table: String): Unit =
+      df.withColumn("fbucket", pmod(
+          graft.functions.TextFunctions.charFold(col(fileCol)), lit(nBuckets)))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("fbucket").parquet(s"$dir/$table")
+    write(fresh.definitions, "primary_file_path", "definition_nodes_bucketed")
+    write(fresh.importedSymbols, "file_path", "imported_symbol_nodes_bucketed")
   }
 
   /** T1/T2 — continuous reindex loop: a file-source stream of change records

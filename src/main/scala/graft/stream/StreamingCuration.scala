@@ -79,8 +79,9 @@ object StreamingCuration {
       Seq(idCol), "left_anti")
     // stage boundaries are eager LOCAL CHECKPOINTS here, not the batch
     // face's lazy persists (round-14, VERDICT item 2): a micro-batch
-    // admission's wall is the DRIVER, not the executors — Round14Probe
-    // measured 9.3 s of the 16.5 s steady-state batch spent BETWEEN jobs,
+    // admission's wall is the DRIVER, not the executors — measured
+    // (OPTIMIZATION_r14.md "td_curation_stream / td_pipeline_e2e") 9.3 s
+    // of the 16.5 s steady-state batch spent BETWEEN jobs,
     // re-analyzing the composed plan (scrub → filter → exact → cross-index
     // → minhash self-join → label rounds) for every eager operator action
     // (~32 per admission; Catalyst analysis cost grows with plan depth). A

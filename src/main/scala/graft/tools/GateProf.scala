@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-13 per-gate profiler (SCALE.md / OPTIMIZATION_r13.md evidence
   * generator): runs named gates from [[graft.SparkEntry.queries]] under a
   * Spark job/task listener and prints one JSON line per gate per rep —
@@ -9,12 +7,11 @@ import org.apache.spark.sql.SparkSession
   * time. The (wall − task/cores) gap is the serialized job-submission /
   * planning floor; `jobs` tells how many sequential actions the gate pays.
   *
-  * Modes (env):
-  *  - SPARK_GRAFT_PROF_REPS   reps per gate (default 2; report each)
-  *  - SPARK_GRAFT_PROF_PLAN   "1" additionally writes the formatted plan to
-  *                            plans/r13/<gate>_<tag>.txt
-  *  - SPARK_GRAFT_PROF_TAG    plan filename suffix (default "before")
-  *  - SPARK_GRAFT_AQE         "0" disables AQE session-wide (A/B lever)
+  * It runs the [[graft.Sessions]] profile and Bench's warm protocol, so it
+  * profiles exactly what Bench times. Formatted plans come from
+  * [[graft.ExplainAudit]].
+  *
+  * SPARK_GRAFT_PROF_REPS sets the reps per gate (default 2; report each).
   *
   * Usage: runMain graft.tools.GateProf <gate> [gate...]
   */
@@ -42,21 +39,7 @@ object GateProf {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "2").toInt
-    val dumpPlan = sys.env.getOrElse("SPARK_GRAFT_PROF_PLAN", "0") == "1"
-    val tag = sys.env.getOrElse("SPARK_GRAFT_PROF_TAG", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        if (sys.env.getOrElse("SPARK_GRAFT_AQE", "1") == "0") "false"
-        else "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus.toInt, "gate-prof")
     graft.functions.VectorExpressions.register(spark)
     // same warm protocol as Bench: long-lived serving state outside timing
     if (sys.env.getOrElse("SPARK_GRAFT_WARM_GRAPH", "1") != "0") {
@@ -87,16 +70,6 @@ object GateProf {
           f""""build_sec":${(tPlan - t0) / 1e9}%.2f,""" +
           f""""jobs":${c.jobs.get()},"tasks":${c.tasks.get()},""" +
           f""""task_sec":${c.taskTimeNs.get() / 1e9}%.2f}""")
-        if (dumpPlan && rep == reps) {
-          val planDir = sys.env.getOrElse("SPARK_GRAFT_PROF_PLAN_DIR",
-            "plans/r13")
-          val out = java.nio.file.Paths.get(s"$planDir/${name}_$tag.txt")
-          java.nio.file.Files.createDirectories(out.getParent)
-          java.nio.file.Files.write(out,
-            fn(spark, sfDir).queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
       }
     }
     spark.stop()

@@ -45,13 +45,7 @@ object ScaleUp {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val tables = args.lift(3).map(_.split(",").toSet.filter(_.nonEmpty))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus.toInt, "scale-up")
     scaleDirectory(spark, src, out, factor, tables)
     spark.stop()
   }

@@ -298,6 +298,23 @@ class HttpSpec extends SparkSpec {
     } finally s2.stop()
   }
 
+  test("stop() shuts down the request thread pool") {
+    val s3 = new GraphHttpServer(spark, storeDir, "ws", "proj")
+    val p3 = s3.start(0)
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName.startsWith(s3.threadNamePrefix) && t.isAlive)
+    (1 to 3).foreach { _ =>
+      val conn = java.net.URI.create(s"http://127.0.0.1:$p3/health").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      assert(conn.getResponseCode == 200)
+      conn.disconnect()
+    }
+    assert(poolThreads.nonEmpty, "requests ran on no pool thread")
+    s3.stop()
+    poolThreads.foreach(_.join(5000))
+    assert(poolThreads.isEmpty)
+  }
+
   override def afterAll(): Unit = {
     server.stop()
     super.afterAll()

@@ -13,16 +13,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // static conf (read at context creation): exercised by OperatorsSpec's
-      // extension-injection test via newSession()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 4 cores = 4 shuffle partitions; the profile's spark.sql.extensions is
+    // exercised by OperatorsSpec's extension-injection test via newSession()
+    val s = Sessions.local(4, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -287,6 +287,50 @@ class OtherExtractorsSpec extends AnyFunSuite {
     assert(e.references.exists(_.name == "format_name"))
   }
 
+  test("ruby: an assignment-form case/if/begin opens a scope its end closes") {
+    val e = RubyExtractor.extract(SourceFile("r.rb", "/r.rb", "r", "r.rb",
+      "rb", "ruby",
+      """class Router
+        |  def pick
+        |    target = case kind
+        |      when :a then 1
+        |      else 2
+        |    end
+        |    @cached ||= begin
+        |      target
+        |    end
+        |    target
+        |  end
+        |  def after
+        |  end
+        |end
+        |""".stripMargin))
+    val defs = e.definitions.map(d => d.fqn -> d).toMap
+    assert(defs.keySet == Set("Router", "Router.pick", "Router.after"))
+    assert(defs("Router.pick").endLine == 10) // its own `end`, not the case's
+    assert(defs("Router").endLine == 13)
+  }
+
+  test("typescript: a generic member's type parameters precede its params") {
+    val e = TypeScriptExtractor.extract(SourceFile("r.ts", "/r.ts", "r",
+      "r.ts", "ts", "typescript",
+      """export class Repo {
+        |  save(item: Item): void {
+        |    this.items.push(item);
+        |  }
+        |  static find<T>(id: string): T | undefined {
+        |    return lookup<T>(id);
+        |  }
+        |  merge<K, V extends Map<K, V>>(a: V, b: V): V {
+        |    return a;
+        |  }
+        |}
+        |""".stripMargin))
+    val fqns = e.definitions.map(d => d.fqn -> d.definitionType).toMap
+    assert(fqns == Map("Repo" -> "Class", "Repo.save" -> "Method",
+      "Repo.find" -> "Method", "Repo.merge" -> "Method"))
+  }
+
   test("scala: body-less case classes stay siblings; strings/comments are inert") {
     val q3 = "\"\"\"" // a literal triple quote, embedded via interpolation
     val e = ScalaExtractor.extract(SourceFile("M.scala", "/M.scala", "r",

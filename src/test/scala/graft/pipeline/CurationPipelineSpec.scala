@@ -280,6 +280,21 @@ class CurationPipelineSpec extends SparkSpec {
       "aborted run left fragments registered")
   }
 
+  test("micro-batch planning never raises shuffle partitions above the " +
+    "session's, and restores both keys after the block") {
+    val (aqeKey, pKey) =
+      ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val (aqe, p) = (spark.conf.get(aqeKey), spark.conf.get(pKey))
+    assert(p.toInt <= 4, s"test session has $p shuffle partitions")
+    val small = Seq(doc(1L, 1)).toDF("doc_id", "text", "source")
+    val inside = CurationPipeline.withMicroBatchPlanning(
+        spark, small, 256L << 20) {
+      (spark.conf.get(aqeKey), spark.conf.get(pKey))
+    }
+    assert(inside == ("false", p))
+    assert(spark.conf.get(aqeKey) == aqe && spark.conf.get(pKey) == p)
+  }
+
   test("streaming curation: MemoryStream micro-batches equal sequential " +
     "batch admission; crash-replay admits nothing") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -44,9 +44,9 @@ class StoreScaleSpec extends SparkSpec {
   test("bucketed store stays exchange-free at sf1 (14M-edge graph)") {
     // the sf1 witness of the fixture-scale property above: regenerate the
     // data with `runMain graft.tools.ScaleUp` if absent (bench-data/ is
-    // not tracked). Round8Probe's bucketed mode measured the same layout:
-    // 0 exchanges, and the bucketed-from-disk join beating the cached
-    // store's shuffling join 3.8 s vs 7.2 s.
+    // not tracked). SCALE.md round 8 "Bucketed graph store at sf1"
+    // measured the same layout: 0 exchanges, and the bucketed-from-disk
+    // join beating the cached store's shuffling join 3.8 s vs 7.2 s.
     val sf1 = "/root/repo/bench-data/sf1"
     assume(new java.io.File(s"$sf1/lineitem.parquet").isDirectory,
       "sf1 bench data not generated")
@@ -64,9 +64,11 @@ class StoreScaleSpec extends SparkSpec {
   test("dynamic partition overwrite rewrites only changed file buckets") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dpo").toString
     val nBuckets = 16
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val sessionMode = spark.conf.get(modeKey)
     // initial full write
     graft.stream.IncrementalIndexer.overwriteChangedPartitions(
-      spark, store, dir, nBuckets)
+      store, dir, nBuckets)
     val before = spark.read.parquet(s"$dir/definition_nodes_bucketed")
     assert(before.count() == 100)
     // "reindex" of a single file: defs of f3.py get new names
@@ -74,7 +76,9 @@ class StoreScaleSpec extends SparkSpec {
       .where(col("primary_file_path") === "f3.py")
       .withColumn("name", concat(col("name"), lit("_v2"))))
     graft.stream.IncrementalIndexer.overwriteChangedPartitions(
-      spark, fresh, dir, nBuckets)
+      fresh, dir, nBuckets)
+    // dynamic mode is per write: the shared session keeps its own mode
+    assert(spark.conf.get(modeKey) == sessionMode)
     val after = spark.read.parquet(s"$dir/definition_nodes_bucketed")
     // expectation derived with the same bucketing rule the writer uses
     val changedBuckets = store.definitions
