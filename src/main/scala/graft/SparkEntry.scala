@@ -57,8 +57,28 @@ object SparkEntry {
     String, (org.apache.spark.sql.types.StructType,
       Array[org.apache.spark.sql.Row])]()
 
-  private[graft] def unigramVocabFor(s: SparkSession, key: String,
-      train: => DataFrame): DataFrame = {
+  /** Key of a session memo trained over `$d/$source.parquet`: the
+    * directory and variant plus the source's total size and latest mtime,
+    * so data regenerated under the same `$d` within a session trains
+    * afresh instead of serving the old data's result.
+    */
+  private[graft] def memoKey(s: SparkSession, d: String, source: String,
+                             variant: String): String = {
+    val path = new org.apache.hadoop.fs.Path(s"$d/$source.parquet")
+    val files = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listFiles(path, true)
+    var (bytes, mtime) = (0L, 0L)
+    while (files.hasNext) {
+      val f = files.next()
+      bytes += f.getLen
+      mtime = math.max(mtime, f.getModificationTime)
+    }
+    s"$d#$source#$variant#$bytes#$mtime"
+  }
+
+  private[graft] def unigramVocabFor(s: SparkSession, d: String,
+      variant: String, train: => DataFrame): DataFrame = {
+    val key = memoKey(s, d, "documents", variant)
     val (schema, rows) = uniVocabs.getOrElseUpdate(key, {
       val v = train
       val out = (v.schema, v.collect())
@@ -86,14 +106,15 @@ object SparkEntry {
   private val ivfCentroids = scala.collection.concurrent.TrieMap[
     String, Seq[(Int, Seq[Double])]]()
 
-  private[graft] def ivfCentroidsFor(key: String,
-      train: => Seq[(Int, Seq[Double])]): Seq[(Int, Seq[Double])] =
-    ivfCentroids.getOrElseUpdate(key, train)
+  private[graft] def ivfCentroidsFor(s: SparkSession, d: String,
+      variant: String, train: => Seq[(Int, Seq[Double])])
+      : Seq[(Int, Seq[Double])] =
+    ivfCentroids.getOrElseUpdate(memoKey(s, d, "embeddings", variant), train)
 
   /** The shared full-corpus IVF-16×2 centroids for `sfDir`'s embeddings. */
   private def ivf16For(s: SparkSession, d: String)
       : Option[Seq[(Int, Seq[Double])]] =
-    Some(ivfCentroidsFor(s"$d#ivf#16#2", graft.pipeline.Similarity.ivfTrain(
+    Some(ivfCentroidsFor(s, d, "ivf#16#2", graft.pipeline.Similarity.ivfTrain(
       graft.pipeline.Similarity.normalizedVectors(
         s.read.parquet(s"$d/embeddings.parquet"), "vec_id", "embedding"),
       nlist = 16, lloydIters = 2)))
@@ -113,9 +134,9 @@ object SparkEntry {
   private val pqCodebooks = scala.collection.concurrent.TrieMap[
     String, Seq[(Int, Int, Seq[Double])]]()
 
-  private[graft] def pqRowsFor(key: String,
+  private[graft] def pqRowsFor(s: SparkSession, d: String, variant: String,
       train: => Seq[(Int, Int, Seq[Double])]): Seq[(Int, Int, Seq[Double])] =
-    pqCodebooks.getOrElseUpdate(key, train)
+    pqCodebooks.getOrElseUpdate(memoKey(s, d, "embeddings", variant), train)
 
   private val graphs = scala.collection.concurrent.TrieMap[
     String, org.apache.spark.graphx.Graph[Unit, Unit]]()
@@ -124,9 +145,9 @@ object SparkEntry {
       // TOPOLOGY-ONLY graph: none of the GraphX consumers below reads
       // vertex/edge attributes, and the attributed cache's strings are
       // what overflowed the heap at the 140M-edge probe. Storage level
-      // is decided INSIDE toTopology (GRAFT_GRAPH_STORAGE env; default
-      // MEMORY_ONLY = the interactive-serving protocol); cache()
-      // re-applies the graph's recorded target level
+      // is decided INSIDE toTopology from the edge count (MEMORY_ONLY
+      // while the cache fits half the heap, MEMORY_ONLY_SER beyond);
+      // cache() re-applies the graph's recorded target level
       val g = graft.graph.GraphOps.toTopology(storeFor(spark, sfDir))
       g.cache(); g
     })
@@ -2302,7 +2323,7 @@ object SparkEntry {
         nlist = 16, nprobe = 14, m = 8, ksub = 32, lloydIters = 2,
         rerank = 192, queryFilter = col("vid") < 100,
         pretrainedIvf = ivf16For(s, d),
-        pretrainedPq = Some(pqRowsFor(s"$d#ivfpq#16#2#8#32#2",
+        pretrainedPq = Some(pqRowsFor(s, d, "ivfpq#16#2#8#32#2",
           Similarity.ivfPqTrainRows(embs, "vec_id", "embedding",
             nlist = 16, lloydIters = 2, m = 8, ksub = 32,
             pretrainedIvf = ivf16For(s, d)))))
@@ -2439,7 +2460,7 @@ object SparkEntry {
         // session memo for the deterministic third-corpus quantizer
         // training (the ivf16For discipline; the admissions/probe below
         // still run in-gate, uncached)
-        pretrainedIvf = Some(ivfCentroidsFor(s"$d#ivf#16#2#mod3eq0",
+        pretrainedIvf = Some(ivfCentroidsFor(s, d, "ivf#16#2#mod3eq0",
           graft.pipeline.Similarity.ivfTrain(
             graft.pipeline.Similarity.normalizedVectors(
               embs.where(col("vec_id") % 3 === 0), "vec_id", "embedding"),
@@ -2515,7 +2536,7 @@ object SparkEntry {
       val approx = Similarity.pqTopK(embs, "vec_id", "embedding", k = 5,
         m = 8, ksub = 32, lloydIters = 2, rerank = 192,
         queryFilter = col("vid") < 100,
-        pretrainedPq = Some(pqRowsFor(s"$d#pq#8#32#2",
+        pretrainedPq = Some(pqRowsFor(s, d, "pq#8#32#2",
           Similarity.pqTrainRows(Similarity.normalizedVectors(
             embs, "vec_id", "embedding"), m = 8, ksub = 32, lloydIters = 2))))
       Similarity.recallGate(embs, approx, "pq", k = 5, bound = 0.9,
@@ -3824,7 +3845,7 @@ object SparkEntry {
     q("tok_unigram_train", s"""$uniTwoRounds
       SELECT phrase, CAST(plen AS INT) AS plen, cnt AS n_uses
       FROM ur2base WHERE plen >= 2 ORDER BY phrase""") { (s, d) =>
-      SparkEntry.unigramVocabFor(s, d,
+      SparkEntry.unigramVocabFor(s, d, "all",
         graft.pipeline.Unigram.train(
           s.read.parquet(s"$d/documents.parquet"), "text",
           rounds = 2, maxPhraseLen = 3, minCount = uniMinCount))
@@ -3848,7 +3869,7 @@ object SparkEntry {
     q("tok_unigram_encode", uniEncodeOracle) { (s, d) =>
       val docs = s.read.parquet(s"$d/documents.parquet")
       graft.pipeline.Unigram.encode(docs, "doc_id", "text",
-        SparkEntry.unigramVocabFor(s, d,
+        SparkEntry.unigramVocabFor(s, d, "all",
           graft.pipeline.Unigram.train(docs, "text",
             rounds = 2, maxPhraseLen = 3, minCount = uniMinCount)))
         .orderBy("doc_id")
@@ -3865,7 +3886,7 @@ object SparkEntry {
         s"${ProcessHandle.current().pid()}_$digest"
       SparkEntry.registerTmpCleanup(dir)
       graft.store.TokenizerStore.saveUnigram(s, dir,
-        SparkEntry.unigramVocabFor(s, d,
+        SparkEntry.unigramVocabFor(s, d, "all",
           graft.pipeline.Unigram.train(docs, "text",
             rounds = 2, maxPhraseLen = 3, minCount = uniMinCount)))
       graft.store.TokenizerStore.open(s, dir)
@@ -3911,7 +3932,7 @@ object SparkEntry {
         s"${ProcessHandle.current().pid()}_$digest"
       SparkEntry.registerTmpCleanup(dir)
       graft.store.TokenizerStore.saveUnigram(s, dir,
-        SparkEntry.unigramVocabFor(s, d + "#oov",
+        SparkEntry.unigramVocabFor(s, d, "oov",
           graft.pipeline.Unigram.train(docs.where(col("doc_id") % 10 < 3),
             "text", rounds = 2, maxPhraseLen = 3, minCount = uniMinCount)))
       graft.store.TokenizerStore.open(s, dir)

@@ -485,7 +485,7 @@ abstract class BraceExtractor extends Extractor {
 
       if (emitTypeFacts && pkg.isEmpty) packageRe.foreach { re =>
         re.findFirstMatchIn(line).foreach { m =>
-          pkg = m.group(1)
+          pkg = m.group(1).replace("`", "")
           facts += RawTypeFact(f.path, "package", "", "", pkg, i)
         }
       }
@@ -837,16 +837,22 @@ object KotlinExtractor extends BraceExtractor {
     """val\s+([A-Za-z_][A-Za-z0-9_]*)\s*=\s*\{""".r -> "Lambda")
   override val keywords = Set("if", "for", "while", "when", "catch", "return",
     "listOf", "mapOf", "setOf")
-  override def parseImport(line: String) = {
-    val re = """^\s*import\s+(\w+(?:\.\w+)*)(\.\*)?(?:\s+as\s+(\w+))?""".r
-    re.findFirstMatchIn(line).map { m =>
+  // a name segment, bare or backquoted (`` com.example.`if` ``: kotlinc
+  // requires the quotes on a keyword segment); the quotes are stripped
+  private val seg = """(?:\w+|`[^`]+`)"""
+  private val importRe =
+    raw"""^\s*import\s+($seg(?:\.$seg)*)(\.\*)?(?:\s+as\s+($seg))?""".r
+  private def unquote(name: String) =
+    if (name == null) null else name.replace("`", "")
+  override def parseImport(line: String) =
+    importRe.findFirstMatchIn(line).map { m =>
       val wildcard = m.group(2) != null
-      (if (wildcard) "wildcard_import" else "import", m.group(1),
-        if (wildcard) "*" else m.group(1).split("\\.").last, m.group(3))
+      val path = unquote(m.group(1))
+      (if (wildcard) "wildcard_import" else "import", path,
+        if (wildcard) "*" else path.split("\\.").last, unquote(m.group(3)))
     }
-  }
 
-  override val packageRe = Some("""^\s*package\s+([\w.]+)""".r)
+  override val packageRe = Some(raw"""^\s*package\s+($seg(?:\.$seg)*)""".r)
   override val qualifyWithPackage = true
   override val emitTypeFacts = true
   override val emitBinaryOperators = true

@@ -25,53 +25,8 @@ object GraphOps {
       .otherwise(NodeTag.ImportedSymbol)
   }
 
-  /** Build a GraphX property graph: vertex attr = (kind, label),
-    * edge attr = (kind, relationship type).
-    */
-  def toGraph(store: GraphStore): Graph[(String, String), (String, String)] = {
-    val vertices = store.directories
-      .select(NodeTag.vertexIdCol(NodeTag.Directory, col("id")).as("vid"),
-        lit("directory").as("kind"), col("name").as("label"))
-      .unionByName(store.files
-        .select(NodeTag.vertexIdCol(NodeTag.File, col("id")).as("vid"),
-          lit("file").as("kind"), col("name").as("label")))
-      .unionByName(store.definitions
-        .select(NodeTag.vertexIdCol(NodeTag.Definition, col("id")).as("vid"),
-          lit("definition").as("kind"), col("fqn").as("label")))
-      .unionByName(store.importedSymbols
-        .select(NodeTag.vertexIdCol(NodeTag.ImportedSymbol, col("id")).as("vid"),
-          lit("imported_symbol").as("kind"), col("name").as("label")))
-      .rdd.map(r => (r.getLong(0), (r.getString(1), r.getString(2))))
-    // same packing, tag chosen per edge side by kind
-    val edges = store.edges
-      .select(
-        (tagOf(col("kind"), from = true) * lit(1L << 32) + col("source_id")).as("src"),
-        (tagOf(col("kind"), from = false) * lit(1L << 32) + col("target_id")).as("dst"),
-        col("kind"), col("type"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), (r.getString(2), r.getString(3))))
-    // 2D edge partitioning bounds vertex replication at sqrt(numParts) —
-    // the standard GraphX layout for iterative algorithms (pagerank, Pregel)
-    Graph(vertices, edges, defaultVertexAttr = null,
-        edgeStorageLevel = storageLevel, vertexStorageLevel = storageLevel)
-      .partitionBy(
-        org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
-  }
-
-  /** Storage level for GraphX caches: MEMORY_ONLY deserialized is the
-    * interactive default; when the graph outgrows the executor-heap
-    * storage fraction, MEMORY_AND_DISK_SER is the honest production
-    * setting — serialized, spillable, several times smaller — selected
-    * via GRAFT_GRAPH_STORAGE so measurement runs state their protocol
-    * explicitly.
-    */
-  private[graft] def storageLevel: org.apache.spark.storage.StorageLevel =
-    sys.env.get("GRAFT_GRAPH_STORAGE")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-
   /** Pick the topology-cache storage level from the graph's footprint:
-    * the GRAFT_GRAPH_STORAGE override wins; otherwise MEMORY_ONLY
-    * (deserialized — no per-iteration decode cost) while the estimated
+    * MEMORY_ONLY (deserialized — no per-iteration decode cost) while the estimated
     * cache fits comfortably, MEMORY_ONLY_SER once it would crowd the
     * storage fraction. Measured basis (SCALE.md round 10, sf10 = 140M
     * edges in a 100 GiB heap): the deserialized topology cache runs
@@ -83,27 +38,20 @@ object GraphOps {
     */
   private[graft] def topologyStorageLevel(
       edgeEstimate: Long): org.apache.spark.storage.StorageLevel =
-    sys.env.get("GRAFT_GRAPH_STORAGE")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse {
-        val estBytes = edgeEstimate * 650L
-        if (estBytes > Runtime.getRuntime.maxMemory / 2)
-          org.apache.spark.storage.StorageLevel.MEMORY_ONLY_SER
-        else org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-      }
+    if (edgeEstimate * 650L > Runtime.getRuntime.maxMemory / 2)
+      org.apache.spark.storage.StorageLevel.MEMORY_ONLY_SER
+    else org.apache.spark.storage.StorageLevel.MEMORY_ONLY
 
-  /** TOPOLOGY-ONLY twin of [[toGraph]] — the SAME vertex universe (all
-    * four node tables, so rank ties at the no-in-edge floor keep the
-    * attributed graph's membership) and the same EdgePartition2D layout,
-    * but Unit attributes everywhere. None of the iterative consumers
-    * (PageRank/PPR/HITS/k-hop/degrees) ever reads the (kind, label) /
-    * (kind, type) strings, yet caching them dominated the attributed
-    * graph's footprint (~100+ bytes/element vs 16 bytes of packed ids):
-    * at the 140M-edge second-decade probe the string-attributed cache
-    * overflowed a 106 GiB heap while this one fits in memory. This is
-    * what a 1000-executor deployment should cache for bulk rankings —
-    * attributes live in the columnar store and join back by id AFTER
-    * the iteration, not inside it.
+  /** The store as a TOPOLOGY-ONLY GraphX graph: every node of the four
+    * node tables is a vertex, edges carry no attributes, and the layout is
+    * EdgePartition2D (vertex replication bounded at sqrt(numParts) — the
+    * standard layout for iterative algorithms). None of the iterative
+    * consumers (PageRank/PPR/HITS/k-hop/degrees) reads kind/label strings,
+    * and caching them dominated an attributed graph's footprint (~100+
+    * bytes/element vs 16 bytes of packed ids): at the 140M-edge
+    * second-decade probe a string-attributed cache overflowed a 106 GiB
+    * heap while this one fits in memory. Attributes live in the columnar
+    * store and join back by id AFTER the iteration, not inside it.
     */
   def toTopology(store: GraphStore): Graph[Unit, Unit] = {
     // footprint-aware storage pick: edges.count() against the cacheAll'd
@@ -179,26 +127,10 @@ object GraphOps {
       .toDF("tag", "id", "hops")
   }
 
-  /** Undirected connected components over the whole store; returns
-    * (kind, id, component) as a DataFrame.
-    */
-  def components(spark: SparkSession, store: GraphStore): DataFrame = {
-    import spark.implicits._
-    val g = toGraph(store)
-    val cc = g.connectedComponents().vertices
-      .map { case (vid, comp) => (vid >> 32, vid & 0xffffffffL, comp) }
-      .toDF("tag", "id", "component")
-    cc
-  }
-
   /** PageRank over the whole graph (bulk analytics beyond the reference's
     * per-node queries): importance of definitions by incoming call mass.
     * Returns (kind, id, rank) sorted descending.
     */
-  def pageRank(spark: SparkSession, store: GraphStore,
-               iters: Int = 10, resetProb: Double = 0.15): DataFrame =
-    pageRankOf(toGraph(store), spark, iters, resetProb)
-
   def pageRankOf[VD: scala.reflect.ClassTag, ED: scala.reflect.ClassTag](
                  g: Graph[VD, ED],
                  spark: SparkSession, iters: Int = 10,
@@ -234,9 +166,6 @@ object GraphOps {
   /** Degree distribution per node kind — a bulk-analytics op the reference's
     * per-node Q8 cannot express without N queries.
     */
-  def degreeByKind(spark: SparkSession, store: GraphStore): DataFrame =
-    degreeByKindOf(toGraph(store), spark)
-
   def degreeByKindOf[VD: scala.reflect.ClassTag, ED: scala.reflect.ClassTag](
                      g: Graph[VD, ED],
                      spark: SparkSession): DataFrame = {

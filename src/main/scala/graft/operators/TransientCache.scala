@@ -30,12 +30,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * Contract: operators register caches with [[cache]] (or [[register]]
   * for self-managed persists); each registration records the FILE PATHS
-  * the fragment's analyzed plan reads. Two reclamation faces:
+  * the fragment's analyzed plan reads, and the [[BatchScope]]s open on
+  * the registering thread. Three reclamation faces:
   *
-  *   - [[drain]] — everything. Batch drivers (the streaming foreachBatch
-  *     faces, composed-pipeline publish points) call it once their
-  *     action has completed and before mutating stores their fragments
-  *     read.
+  *   - [[drain]] — everything (Bench, between timed queries).
+  *   - [[drainScope]] — what one batch registered, at its scope's close.
   *   - [[drainPath]] — only fragments whose plans read under (or above)
   *     a given directory. The persisted STORES call this in their
   *     mutating faces (build/append/retire/compact swap), which makes
@@ -96,11 +95,18 @@ object TransientCache {
     df
   }
 
+  /** [[register]] for the path and global drains only — for a cache that
+    * outlives the batch scope that made it (a lazy returned result reads it).
+    */
+  def registerUnscoped(df: DataFrame): DataFrame = {
+    reg.put(df, Entry(sourcePaths(df), Set.empty))
+    df
+  }
+
   /** Open a lifecycle scope: everything registered by THIS THREAD while
-    * the scope is open is dropped by the matching [[drainScope]].
-    * Composed drivers (the batch curation pipeline, the streaming
-    * foreachBatch faces) bracket their run with this, so their
-    * operator-internal fragments end with the run instead of lingering —
+    * the scope is open is dropped by the matching [[drainScope]]. Each
+    * [[BatchScope]] brackets its batch with the pair, on every path, so
+    * operator-internal fragments end with the batch instead of lingering —
     * a lingering fragment whose BLOCKS a later RDD-level sweep frees is
     * worse than no cache at all: the sweep clears the buffer RDD's
     * storage level without unregistering the SQL entry, so every later
@@ -111,7 +117,7 @@ object TransientCache {
     * OTHER operators — same thread outside the scope, or any concurrent
     * driver thread — untouched.
     */
-  def beginScope(): Long = {
+  private[operators] def beginScope(): Long = {
     val id = seqGen.incrementAndGet()
     activeScopes.set(id :: activeScopes.get())
     id
@@ -123,7 +129,7 @@ object TransientCache {
     * scope still reclaims everything its run registered). See
     * [[beginScope]].
     */
-  def drainScope(mark: Long): Unit = {
+  private[operators] def drainScope(mark: Long): Unit = {
     val cur = activeScopes.get()
     val idx = cur.indexOf(mark)
     if (idx < 0 && cur.nonEmpty)

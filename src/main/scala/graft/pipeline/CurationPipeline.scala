@@ -1,10 +1,13 @@
 package graft.pipeline
 
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions.charFold
+import graft.operators.{BatchScope, TransientCache}
 import graft.store.{CorpusStore, DedupIndexStore}
 
 /** The end-to-end LLM-data curation DAG — every stage the repo gates
@@ -59,67 +62,6 @@ object CurationPipeline {
 
   final case class StageStat(stage: String, rows: Long, seconds: Double)
 
-  /** Run `f` with adaptive query execution DISABLED when `input`'s
-    * optimizer size estimate is under `thresholdBytes` (no job — the
-    * estimate comes from file-scan statistics), restoring the session
-    * conf after. Why: AQE re-plans at every shuffle-stage boundary, which
-    * buys skew handling and partition coalescing at corpus scale but
-    * turns a micro-batch admission into ~50 SEQUENTIAL stage-jobs whose
-    * fixed submission latency IS the wall — measured at sf0.1: the
-    * cleaning chain fell from 15.7 s / 51 jobs to 8.6 s / 18 jobs with
-    * AQE off, with identical output (AQE never changes results). At the
-    * threshold and above, AQE stays on — a 100 TB daily batch wants every
-    * re-plan. Session-conf flip caveat: a concurrent serving query that
-    * PLANS inside the window plans without AQE — correct, possibly
-    * slower for that one query; admissions hold the store lock but
-    * readers deliberately don't.
-    */
-  /** True when `input`'s optimizer size estimate is under
-    * `thresholdBytes` — the micro-batch dispatch test shared by
-    * [[withMicroBatchPlanning]] and [[run]]'s stage-boundary choice.
-    */
-  private[graft] def isMicroBatch(input: DataFrame,
-                                  thresholdBytes: Long): Boolean =
-    thresholdBytes > 0 && scala.util.Try(
-      input.queryExecution.optimizedPlan.stats.sizeInBytes
-        <= BigInt(thresholdBytes)).getOrElse(false)
-
-  private[graft] def withMicroBatchPlanning[T](spark: SparkSession,
-      input: DataFrame, thresholdBytes: Long)(f: => T): T = {
-    val est: Option[BigInt] =
-      if (thresholdBytes <= 0) None
-      else scala.util.Try(
-        input.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-    val small = est.exists(_ <= BigInt(thresholdBytes))
-    if (!small) f
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val pKey = "spark.sql.shuffle.partitions"
-      val before = spark.conf.get(key)
-      val beforeP = spark.conf.get(pKey)
-      spark.conf.set(key, "false")
-      // Round-14 (VERDICT item 2): with AQE off, every shuffle in the
-      // admission runs at the SESSION's partition count — tiny stages of
-      // `cpus` near-empty tasks each, whose launch overhead made the
-      // composed gates run FASTER on 8 cores than 32 (the 8-core bench
-      // also ran 8 shuffle partitions). Size the micro-batch's shuffles to
-      // its bytes instead: ~8 MB per partition, floor 8 (CPU-dense text
-      // stages want parallelism even on KB inputs — swept 4/8/16 at sf0.1:
-      // steady-state admission 10.2/8.3/9.3 s; 8 wins), never above the
-      // session value (a session under 8 partitions keeps its own). Only
-      // active below thresholdBytes, so a real corpus-scale batch keeps
-      // the session layout AND its AQE re-plans.
-      val bytesP = est.map(b => (b / (8L << 20)).toLong + 1).getOrElse(8L)
-      val sizedP = math.min(scala.util.Try(beforeP.toLong).getOrElse(8L),
-        math.max(8L, bytesP)).toString
-      spark.conf.set(pKey, sizedP)
-      try f finally {
-        spark.conf.set(key, before)
-        spark.conf.set(pKey, beforeP)
-      }
-    }
-  }
-
   final case class Result(summary: DataFrame, stats: Seq[StageStat])
 
   /** Run the full DAG over `docs`, publishing the curated corpus under
@@ -134,41 +76,19 @@ object CurationPipeline {
           dsirTarget: Column, index: DedupIndexStore, publishDir: String,
           cfg: Config = Config(), staged: Boolean = false,
           aqeOffBelowBytes: Long = 256L << 20): Result =
-      // small-input planning mode (see withMicroBatchPlanning): the
-      // composed DAG's eager spine is ~dozens of sequential stage-jobs,
-      // and below the size threshold their fixed AQE re-plan latency
-      // dominates the run. 0 disables.
-      withMicroBatchPlanning(spark, docs, aqeOffBelowBytes) {
-    // lifecycle scope: every operator-internal fragment registered during
-    // this run is dropped once the stores are final — lingering fragments
-    // whose blocks a later RDD sweep frees become recompute-per-use traps
-    // (see TransientCache.beginScope). An ABORTED run drains its scope too
-    // (the catch below): a failed daily batch must not leave a session's
-    // worth of half-built fragments registered for the next run to trip on.
-    // (Not try/finally: the success path MUST drain before stage 9, whose
-    // read-back cache outlives the run by design.)
-    val scope = graft.operators.TransientCache.beginScope()
+    // the run's batch scope: micro-batch planning below the size threshold
+    // (0 disables — see BatchScope), every stage frame, and every operator
+    // fragment registered during the run end with it, on success and on
+    // failure — a failed daily batch must not leave a session's worth of
+    // half-built fragments registered for the next run to trip on
+    Using.resource(BatchScope(docs, aqeOffBelowBytes)) { scope =>
     val stats = scala.collection.mutable.ListBuffer.empty[StageStat]
-    val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    try {
 
-    // a stage boundary: persist (every stage output here feeds >1
-    // downstream consumer or an action-bearing operator), optionally
-    // force + time. In MICRO-BATCH mode the boundary is an eager local
-    // checkpoint instead (the StreamingCuration.processBatch discipline,
-    // round 14): a small run's wall is the driver re-analyzing the deep
-    // composed plan per eager operator action — a LogicalRDD boundary
-    // truncates every downstream analysis at the previous stage (measured
-    // 2× on the steady-state streaming admission). At corpus scale the
-    // lazy persist keeps lineage replayable and lets Spark pipeline
-    // stages, so the checkpoint path only engages under the same size
-    // gate as the AQE flip.
-    val micro = isMicroBatch(docs, aqeOffBelowBytes)
+    // a stage boundary (every stage output here feeds >1 downstream
+    // consumer or an action-bearing operator — see BatchScope.stage),
+    // optionally forced + timed
     def stageFn(name: String)(df: DataFrame): DataFrame = {
-      val p =
-        if (micro) df.localCheckpoint(true)
-        else df.persist(StorageLevel.MEMORY_AND_DISK)
-      live += p
+      val p = scope.stage(df)
       if (staged) {
         val t0 = System.nanoTime()
         val n = p.count()
@@ -206,11 +126,9 @@ object CurationPipeline {
     // graft.operators.TransientCache). Same placement as the streaming
     // twin's post-checkpoint drain (StreamingCuration.processBatch);
     // path-scoped so unrelated warm caches in the session survive.
-    live.foreach { df =>
-      if (micro) graft.operators.LocalCp.free(df) else df.unpersist(false)
-    }
-    graft.operators.TransientCache.drainPath(publishDir)
-    graft.operators.TransientCache.drainPath(index.dir)
+    scope.release()
+    TransientCache.drainPath(publishDir)
+    TransientCache.drainPath(index.dir)
     // admit FROM THE STORE, not the in-flight `sampled`: its lineage reads
     // the very band/shingle tables the append writes, so an eviction-forced
     // recompute mid-append would race the mutation (the streaming twin
@@ -219,10 +137,6 @@ object CurationPipeline {
     // survivors — nothing at corpus scale)
     index.append(CorpusStore.docs(spark, publishDir)
       .select("doc_id", "text"), "doc_id", "text")
-    // both stores are final: the run's remaining operator fragments (the
-    // ones over the immutable SOURCE corpus, deliberately spared by the
-    // path drains above) have served every consumer — end their lifecycle
-    graft.operators.TransientCache.drainScope(scope)
     if (staged) {
       val n = CorpusStore.manifest(spark, publishDir)
         .agg(sum("n_docs")).head().getLong(0)
@@ -231,7 +145,9 @@ object CurationPipeline {
 
     // ---- 9. read-back summary: encode the STORED text with the trained
     //      merges, pack per shard, census + checksum, and gate on
-    //      expectations over the published corpus
+    //      expectations over the published corpus. Inside the scope so its
+    //      eager checks plan like the rest of the run; its cache outlives
+    //      the scope (see readBackSummary)
     val t9 = System.nanoTime()
     val summary = readBackSummary(spark, publishDir, merges, cfg)
     if (staged) {
@@ -239,13 +155,6 @@ object CurationPipeline {
       stats += StageStat("9_pack_summary", n, (System.nanoTime() - t9) / 1e9)
     }
     Result(summary, stats.toList)
-    } catch { case t: Throwable =>
-      live.foreach(df => scala.util.Try {
-        graft.operators.LocalCp.free(df); df.unpersist(false)
-      })
-      graft.operators.TransientCache.drainScope(scope)
-      throw t
-    }
   }
 
   /** Stage 9 (shared by [[run]] and [[runResumable]]): the per-shard
@@ -255,11 +164,11 @@ object CurationPipeline {
   private def readBackSummary(spark: SparkSession, publishDir: String,
                               merges: DataFrame, cfg: Config): DataFrame = {
     // registered (not just persisted): the returned summary is lazy, so
-    // this cache must outlive the call — registration hands its lifetime
-    // to the store drains, so the NEXT publish over the same corpus dir
-    // reclaims it instead of leaking one 100%-of-corpus cache per run in
-    // a long-lived session
-    val stored = graft.operators.TransientCache.register(
+    // this cache must outlive the call AND the caller's batch scope —
+    // unscoped registration hands its lifetime to the store drains, so the
+    // NEXT publish over the same corpus dir reclaims it instead of leaking
+    // one 100%-of-corpus cache per run in a long-lived session
+    val stored = TransientCache.registerUnscoped(
       CorpusStore.docs(spark, publishDir)
         .persist(StorageLevel.MEMORY_AND_DISK))
     val expectOk = graft.operators.Profile.expect(stored, Seq(
@@ -325,9 +234,11 @@ object CurationPipeline {
                    benchTextCol: String, dsirTarget: Column,
                    index: DedupIndexStore, publishDir: String,
                    workDir: String, cfg: Config = Config(),
-                   checkpoint: String => Unit = _ => ()): Result = {
-    val scope = graft.operators.TransientCache.beginScope()
-    try {
+                   checkpoint: String => Unit = _ => ()): Result =
+    // a killed-at-any-boundary run (the face's whole point) must not leave
+    // its frames pinned or its operator fragments registered for the
+    // RESUME to trip on; the scope ends both on every path
+    Using.resource(BatchScope()) { scope =>
     val hconf = spark.sparkContext.hadoopConfiguration
     def fsOf(p: String) =
       new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
@@ -337,19 +248,13 @@ object CurationPipeline {
     // ---- A. survivors (stages 1-6), durable behind a tmp+rename
     val sPath = s"$workDir/survivors"
     if (!exists(sPath)) {
-      val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      val persistStage = { (_: String) => (df: DataFrame) =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        live += p
-        p
-      }
       val sampled = curatedPlan(docs, idCol, textCol, benchmark,
-        benchTextCol, dsirTarget, index, cfg, persistStage)
+        benchTextCol, dsirTarget, index, cfg, _ => scope.persist)
       val tmp = sPath + "__tmp"
       sampled.select(col("doc_id"), col("text"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-      live.foreach(_.unpersist(false))
-      graft.operators.TransientCache.drainPath(index.dir)
+      scope.release()
+      TransientCache.drainPath(index.dir)
       val fs = fsOf(sPath)
       require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
           new org.apache.hadoop.fs.Path(sPath)),
@@ -381,29 +286,20 @@ object CurationPipeline {
 
     // ---- D. admit — replay-guarded, so a crash mid-append converges on
     //      resume instead of double-appending (no ledger needed; the
-    //      index's own doc ids are the guard). localCheckpoint severs the
+    //      index's own doc ids are the guard). The checkpoint severs the
     //      index read from the index write; the drains drop operator
     //      fragments over both stores first (same discipline as run)
-    graft.operators.TransientCache.drainPath(publishDir)
-    graft.operators.TransientCache.drainPath(index.dir)
-    val fresh = CorpusStore.docs(spark, publishDir)
+    TransientCache.drainPath(publishDir)
+    TransientCache.drainPath(index.dir)
+    val fresh = scope.checkpoint(CorpusStore.docs(spark, publishDir)
       .select("doc_id", "text")
       .join(index.shingles.select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+        Seq("doc_id"), "left_anti"))
     if (!fresh.isEmpty) index.append(fresh, "doc_id", "text")
-    // stores final — end the run's fragment lifecycle (run() discipline)
-    graft.operators.TransientCache.drainScope(scope)
     checkpoint("admit")
 
     // ---- E. summary: pure read-back, recomputed on every resume
     Result(readBackSummary(spark, publishDir, merges, cfg), Nil)
-    } catch { case t: Throwable =>
-      // a killed-at-any-boundary run (the face's whole point) must not
-      // leave its operator fragments registered for the RESUME to trip on
-      graft.operators.TransientCache.drainScope(scope)
-      throw t
-    }
   }
 
   /** The composed curation plan, stages 1-6 (everything before the

@@ -994,52 +994,44 @@ object Dedup {
     // `rounds` must label identically on both paths, and the dd_clusters
     // oracle replays the bounded recurrence), so output is path-invariant;
     // spec-pinned driver == distributed including a >rounds-diameter chain.
-    //
-    // Dispatch and delivery are ONE bounded job (round-13 job-floor work):
-    // the old shape paid three jobs before any label moved — checkpoint
-    // the symmetrized edges, count them, then collect — and each job's
-    // fixed submission latency dominates at micro-batch scale. The
-    // limit(bound+1) probe IS the dispatch test AND, on the driver path,
-    // the edge delivery; CollectLimit scans partitions incrementally, so
-    // a tiny pair graph rarely touches them all. The distributed path
-    // (probe overflow) re-plans with the checkpoint it needs for its
-    // per-round reuse — one redundant bounded job at the crossover,
-    // nothing at either steady state.
-    require(driverMaxEdges < Int.MaxValue, s"driverMaxEdges: $driverMaxEdges")
-    val probe =
-      if (symPlan.schema("u").dataType ==
-          org.apache.spark.sql.types.LongType)
-        Some(symPlan.limit(driverMaxEdges.toInt + 1).collect())
-      else None
-    if (probe.exists(_.length <= driverMaxEdges)) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val adj = new scala.collection.mutable.HashMap[Long,
-        scala.collection.mutable.ArrayBuffer[Long]]()
-      probe.get.foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0),
-          new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(1)
-      }
-      var labels: Map[Long, Long] = adj.keysIterator.map(k => k -> k).toMap
-      var round = 0
-      var changed = true
-      while (round < rounds && changed) {
-        changed = false
-        val next = adj.iterator.map { case (u, vs) =>
-          var m = labels(u)
-          vs.foreach { v => val l = labels(v); if (l < m) m = l }
-          if (m != labels(u)) changed = true
-          u -> m
-        }.toMap
-        labels = next
-        round += 1
-      }
-      return labels.toSeq.sortBy(_._1).toDF("doc_id", "keeper_id")
+    // Dispatch and delivery are ONE bounded job (see BoundedCollect); the
+    // driver path needs Long ids, so other id types go distributed.
+    val bound =
+      if (symPlan.schema("u").dataType == org.apache.spark.sql.types.LongType)
+        driverMaxEdges
+      else 0L
+    val symRows = graft.operators.BoundedCollect(symPlan, bound) match {
+      case Right(plan) => plan
+      case Left(rows) =>
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        val adj = new scala.collection.mutable.HashMap[Long,
+          scala.collection.mutable.ArrayBuffer[Long]]()
+        rows.foreach { r =>
+          adj.getOrElseUpdate(r.getLong(0),
+            new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(1)
+        }
+        var labels: Map[Long, Long] = adj.keysIterator.map(k => k -> k).toMap
+        var round = 0
+        var changed = true
+        while (round < rounds && changed) {
+          changed = false
+          val next = adj.iterator.map { case (u, vs) =>
+            var m = labels(u)
+            vs.foreach { v => val l = labels(v); if (l < m) m = l }
+            if (m != labels(u)) changed = true
+            u -> m
+          }.toMap
+          labels = next
+          round += 1
+        }
+        return labels.toSeq.sortBy(_._1).toDF("doc_id", "keeper_id")
     }
-    val sym = symPlan.localCheckpoint(true)
-    var labels = sym.select(col("u").as("doc_id"))
-      .distinct().withColumn("lbl", col("doc_id"))
-      .localCheckpoint(true)
+    // checkpoints the returned plan reads go to the caller's batch scope
+    val cp = graft.operators.BatchScope.localCheckpoint _
+    val sym = cp(symRows)
+    var labels = cp(sym.select(col("u").as("doc_id"))
+      .distinct().withColumn("lbl", col("doc_id")))
     // early exit: min-label propagation is monotone, so a round that changes
     // zero labels means the fixpoint is reached and every remaining round is
     // a no-op — identical output, fewer jobs (near-dup clusters converge in
@@ -1053,17 +1045,17 @@ object Dedup {
         .join(labels.select(col("doc_id").as("v2"), col("lbl").as("vlbl")),
           col("v") === col("v2"))
         .groupBy(col("u")).agg(min(col("vlbl")).as("nlbl"))
-      val next = labels
+      val next = cp(labels
         .join(neighborMin, col("doc_id") === col("u"), "left_outer")
         .select(col("doc_id"), col("lbl").as("prev"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
+          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
       converged = next.where(col("lbl") =!= col("prev")).isEmpty
       // superseded generation; `next` is materialized
       graft.operators.LocalCp.free(labels)
       labels = next.select(col("doc_id"), col("lbl"))
       round += 1
     }
+    graft.operators.LocalCp.free(sym)
     labels.select(col("doc_id"), col("lbl").as("keeper_id"))
   }
 
@@ -1109,37 +1101,35 @@ object Dedup {
     // EXACT components with the component minimum as root, so an in-memory
     // union-find over the same edges lands on the identical (doc_id,
     // keeper_id) rows for ANY diameter — property-pinned against the
-    // distributed path in DedupSpec. The limit(bound+1) probe is the
-    // dispatch test AND, on the driver path, the edge delivery.
-    require(driverMaxEdges < Int.MaxValue, s"driverMaxEdges: $driverMaxEdges")
-    val probe =
-      if (driverMaxEdges > 0)
-        Some(basePlan.limit(driverMaxEdges.toInt + 1).collect())
-      else None
-    if (probe.exists(_.length <= driverMaxEdges)) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val parent = new scala.collection.mutable.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      probe.get.foreach { row =>
-        val (v, u) = (row.getLong(0), row.getLong(1))
-        parent.getOrElseUpdate(v, v); parent.getOrElseUpdate(u, u)
-        val (rv, ru) = (find(v), find(u))
-        if (rv != ru) { if (rv < ru) parent(ru) = rv else parent(rv) = ru }
-      }
-      // root-by-union keeps the smaller id, so find() is the component min
-      return parent.keysIterator.map(k => (k, find(k))).toSeq
-        .sortBy(_._1).toDF("doc_id", "keeper_id")
+    // distributed path in DedupSpec. One bounded job (see BoundedCollect).
+    val baseRows = graft.operators.BoundedCollect(basePlan, driverMaxEdges) match {
+      case Right(plan) => plan
+      case Left(rows) =>
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        val parent = new scala.collection.mutable.HashMap[Long, Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x
+          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        rows.foreach { row =>
+          val (v, u) = (row.getLong(0), row.getLong(1))
+          parent.getOrElseUpdate(v, v); parent.getOrElseUpdate(u, u)
+          val (rv, ru) = (find(v), find(u))
+          if (rv != ru) { if (rv < ru) parent(ru) = rv else parent(rv) = ru }
+        }
+        // root-by-union keeps the smaller id, so find() is the component min
+        return parent.keysIterator.map(k => (k, find(k))).toSeq
+          .sortBy(_._1).toDF("doc_id", "keeper_id")
     }
-    val base = basePlan.localCheckpoint(true)
-    val participants = base.select(explode(array(col("u"), col("v"))).as("doc_id"))
-      .distinct().localCheckpoint(true)
+    // checkpoints the returned plan reads go to the caller's batch scope
+    val cp = graft.operators.BatchScope.localCheckpoint _
+    val base = cp(baseRows)
+    val participants = cp(
+      base.select(explode(array(col("u"), col("v"))).as("doc_id")).distinct())
     // edges are (child u -> parent v) pointers with v < u throughout
     var edges = base
     var round = 0
@@ -1160,14 +1150,14 @@ object Dedup {
       // small-star: over the re-pointed edges (all parent-oriented v < u),
       // every node and each of its <=-neighbors point at the minimum
       val m2 = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val next = ls.join(m2, "u")
+      val next = cp(ls.join(m2, "u")
         .select(explode(array(
           struct(col("v").as("a"), col("m").as("b")),
           struct(col("u").as("a"), col("m").as("b")))).as("e"))
         .select(greatest(col("e.a"), col("e.b")).as("u"),
           least(col("e.a"), col("e.b")).as("v"))
         .where(col("u") =!= col("v"))
-        .distinct().localCheckpoint(true)
+        .distinct())
       converged = next.count() == edges.count() &&
         next.exceptAll(edges).isEmpty
       // two-generation live set: the superseded round's checkpoint is

@@ -75,9 +75,10 @@ object Dsir {
                      targetPred: Column, buckets: Int = 1024): DataFrame = {
     require(buckets > 0, s"buckets must be positive: $buckets")
     // three consumers (scoring, per-bucket model, totals) — materialize the
-    // count table once instead of re-running the corpus tokenize per branch
-    val cnts = bucketCounts(docs, idCol, textCol, targetPred, buckets)
-      .localCheckpoint(true)
+    // count table once instead of re-running the corpus tokenize per branch;
+    // the returned plan reads it, so the caller's batch scope frees it
+    val cnts = graft.operators.BatchScope.localCheckpoint(
+      bucketCounts(docs, idCol, textCol, targetPred, buckets))
     val scores = cnts.join(broadcast(model(cnts, buckets)), "__b")
       .groupBy(idCol)
       .agg(round(sum(col("__c") * col("__dlp")), 4).as("dsir_logw"))
@@ -93,9 +94,10 @@ object Dsir {
     * aggregation.
     */
   def fitModelArray(corpus: DataFrame, idCol: String, textCol: String,
-                    targetPred: Column, buckets: Int = 1024): Array[Double] = {
-    val cnts = bucketCounts(corpus, idCol, textCol, targetPred, buckets)
-      .localCheckpoint(true)
+                    targetPred: Column, buckets: Int = 1024): Array[Double] =
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val cnts = scope.checkpoint(
+      bucketCounts(corpus, idCol, textCol, targetPred, buckets))
     val rows = model(cnts, buckets).collect()
     val arr = new Array[Double](buckets)
     // absent buckets: rc = tc = 0 → ln((0+1)/(T+B)) − ln((0+1)/(R+B))

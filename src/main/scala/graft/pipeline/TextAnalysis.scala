@@ -271,26 +271,21 @@ object TextAnalysis {
       .where(size(col("toks")) >= 2)
       .groupBy("toks").agg(count(lit(1)).as("w"))
       .as[(Seq[String], Long)]
-    // dispatch and delivery are ONE bounded job (the clusterKeepers
-    // discipline, round-13 job-floor work): the old shape persisted the
-    // weight table, counted it, then collected it — three jobs before a
-    // single merge, each with fixed submission latency the composed
-    // pipeline pays per run. The limit(bound+1) probe IS the dispatch
-    // test AND, on the (overwhelmingly common) driver path, the weight
-    // table itself. Only the distributed path persists — it re-reads the
-    // table every round.
-    require(driverMaxDistinctSeqs < Int.MaxValue,
-      s"driverMaxDistinctSeqs: $driverMaxDistinctSeqs")
-    val probe = weightedPlan.limit(driverMaxDistinctSeqs.toInt + 1).collect()
-    val merges =
-      if (probe.length <= driverMaxDistinctSeqs)
-        trainBpeDriver(probe.map { case (s, w) => (s.toArray, w) }, rounds)
-      else {
-        val weighted = weightedPlan
+    // dispatch and delivery are ONE bounded job (round-13 job-floor work;
+    // see BoundedCollect): the old shape persisted the weight table,
+    // counted it, then collected it — three jobs before a single merge.
+    // Only the distributed path persists — it re-reads the table every
+    // round.
+    val merges = graft.operators.BoundedCollect(weightedPlan,
+        driverMaxDistinctSeqs) match {
+      case Left(rows) =>
+        trainBpeDriver(rows.map { case (s, w) => (s.toArray, w) }, rounds)
+      case Right(plan) =>
+        val weighted = plan
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try bpeMergesDistributed(weighted, rounds)
         finally { weighted.unpersist(); () }
-      }
+    }
     merges.toDF("round", "pair", "n_pairs")
   }
 

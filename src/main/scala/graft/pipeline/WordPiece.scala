@@ -59,22 +59,22 @@ object WordPiece {
                       driverMaxDistinctSeqs: Long = 2L << 20): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val weighted = docs
+    val weightedPlan = docs
       .select(tokens(col(textCol)).as("toks"))
       .where(size(col("toks")) >= 1)
       .groupBy("toks").agg(count(lit(1)).as("w"))
       .as[(Seq[String], Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val distinctSeqs = weighted.count()
-      val merges =
-        if (distinctSeqs <= driverMaxDistinctSeqs)
-          trainWordPieceDriver(
-            weighted.collect().map { case (s, w) => (s.toArray, w) },
-            rounds, minPairs)
-        else wordpieceMergesDistributed(weighted, rounds, minPairs)
-      merges.toDF("round", "pair", "n_pairs", "score12")
-    } finally { weighted.unpersist(); () }
+    val merges = graft.operators.BoundedCollect(weightedPlan,
+        driverMaxDistinctSeqs) match {
+      case Left(rows) => trainWordPieceDriver(
+        rows.map { case (s, w) => (s.toArray, w) }, rounds, minPairs)
+      case Right(plan) =>
+        val weighted = plan
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try wordpieceMergesDistributed(weighted, rounds, minPairs)
+        finally { weighted.unpersist(); () }
+    }
+    merges.toDF("round", "pair", "n_pairs", "score12")
   }
 
   /** Driver-side WordPiece induction: the BPE driver loop

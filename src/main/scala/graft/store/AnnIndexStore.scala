@@ -62,16 +62,16 @@ final class AnnIndexStore(val dir: String, spark: SparkSession) {
     */
   def retire(ids: DataFrame, idCol: String): Unit =
       StoreMaintenance.lockFor(dir).synchronized {
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
     val target = StoreCompaction.appendTarget(spark, s"$dir/retired")
-    ids.select(col(idCol).as("vid")).distinct()
-      .join(broadcast(retired.select("vid")), Seq("vid"), "left_anti")
-      // materialize BEFORE the append: the anti-join reads the very table
-      // the write appends to (self-referencing append otherwise)
-      .localCheckpoint(true)
+    // materialize BEFORE the append: the anti-join reads the very table
+    // the write appends to (self-referencing append otherwise)
+    scope.checkpoint(ids.select(col(idCol).as("vid")).distinct()
+      .join(broadcast(retired.select("vid")), Seq("vid"), "left_anti"))
       .write.mode(SaveMode.Append).parquet(target)
     spark.catalog.refreshByPath(target)
     graft.operators.TransientCache.drainPath(dir)
-  }
+  }}
 
   /** Vector ids present in the physical cells OR tombstoned — the
     * replay-guard key set for streaming admission
@@ -149,13 +149,14 @@ final class AnnIndexStore(val dir: String, spark: SparkSession) {
     * centroids/meta are tiny and immutable.
     */
   def compact(): Unit = StoreMaintenance.lockFor(dir).synchronized {
-    val gone = retired.select("vid").localCheckpoint(true)
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val gone = scope.checkpoint(retired.select("vid"))
     StoreCompaction.rewritePartitioned(spark, s"$dir/cells", "cid")(
       _.join(broadcast(gone), Seq("vid"), "left_anti")
         .repartition(col("cid")))
     StoreCompaction.clearTable(spark, s"$dir/retired")
     graft.operators.TransientCache.drainPath(dir)
-  }
+  }}
 
   /** Top-k approximate neighbors of each query vector against the stored
     * index. `queries`: (id, vec) — any vector source, not necessarily
@@ -189,12 +190,12 @@ object AnnIndexStore {
             vecCol: String, nlist: Int = 16, lloydIters: Int = 2,
             metaCols: Seq[String] = Nil,
             pretrainedIvf: Option[Seq[(Int, Seq[Double])]] = None)
-      : AnnIndexStore = {
-    val v = embs.select(Seq(col(idCol).as("vid"),
+      : AnnIndexStore =
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val v = scope.persist(embs.select(Seq(col(idCol).as("vid"),
         col(vecCol).cast("array<double>").as("vec")) ++ metaCols.map(col): _*)
       .withColumn("nrm", sqrt(Similarity.dot(col("vec"), col("vec"))))
-      .where(col("nrm") > 0)
-      .cache()
+      .where(col("nrm") > 0))
     val (centroids, index) =
       Similarity.ivfBuild(v, nlist, lloydIters, pretrainedIvf)
     centroids.write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
@@ -208,7 +209,7 @@ object AnnIndexStore {
     import spark.implicits._
     Seq((nlist, lloydIters)).toDF("nlist", "lloyd_iters")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
-    v.unpersist()
+    scope.release()
     graft.operators.TransientCache.drainPath(dir)
     new AnnIndexStore(dir, spark)
   }

@@ -49,14 +49,16 @@ private[store] object BatchLedger {
     */
   def writeBatch(spark: SparkSession, dir: String, sketch: DataFrame,
                  dims: Seq[String], batchKey: String,
-                 mode: SaveMode = SaveMode.Append): Unit = {
+                 mode: SaveMode = SaveMode.Append): Unit =
     // materialize the sketch ONCE (round-14): the marker row needs the cell
     // count and the write needs the cells, and computing them as two
     // actions ran the full sketch aggregation (a scan + shuffle over the
     // admitted batch) twice per admission. The sketch is bounded by
     // construction (CM: depth × width cells; histogram: keys × buckets), so
-    // an eager local checkpoint holds KBs and both consumers read blocks.
-    val sk = sketch.localCheckpoint(true)
+    // an eager local checkpoint holds KBs and both consumers read blocks;
+    // the scope frees them once the cells are durable, or the write failed
+    scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val sk = scope.checkpoint(sketch)
     val cells = sk.select(lit(batchKey).as("batch_key") +:
       lit(0).as("__marker") +: dims.map(col) :+ col("cnt"): _*)
     val n = sk.count()
@@ -75,7 +77,6 @@ private[store] object BatchLedger {
       rows.write.mode(SaveMode.Append).parquet(target)
       spark.catalog.refreshByPath(target)
     }
-    graft.operators.LocalCp.free(sk) // cells are durable; drop the blocks
   }
 
   /** Marker/cell agreement for every stored batch. */

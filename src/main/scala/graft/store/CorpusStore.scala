@@ -139,15 +139,16 @@ object CorpusStore {
   def retire(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String, textCol: String): DataFrame =
       StoreMaintenance.lockFor(dir).synchronized {
-    val newIds = ids.select(col(idCol).as("doc_id")).distinct()
-      .join(broadcast(retired(spark, dir)), Seq("doc_id"), "left_anti")
-      // materialize BEFORE the append: the anti-join reads the very table
-      // the write appends to (self-referencing append otherwise)
-      .localCheckpoint(true)
-    val goneCensus = census(
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    // materialize BEFORE the append: the anti-join reads the very table
+    // the write appends to (self-referencing append otherwise)
+    val newIds = scope.checkpoint(ids.select(col(idCol).as("doc_id"))
+      .distinct()
+      .join(broadcast(retired(spark, dir)), Seq("doc_id"), "left_anti"))
+    val goneCensus = scope.checkpoint(census(
       physicalDocs(spark, dir).join(
         broadcast(newIds.withColumnRenamed("doc_id", idCol)), Seq(idCol)),
-      textCol).localCheckpoint(true)
+      textCol))
     val target = StoreCompaction.appendTarget(spark, s"$dir/retired")
     newIds.write.mode(SaveMode.Append).parquet(target)
     spark.catalog.refreshByPath(target)
@@ -161,7 +162,7 @@ object CorpusStore {
     StoreCompaction.swapIn(spark, s"$dir/manifest", merged.coalesce(1))
     graft.operators.TransientCache.drainPath(dir)
     manifest(spark, dir)
-  }
+  }}
 
   /** Re-cluster accumulated appends: rewrite the shard directories so each
     * holds a compact file set again, preserving the layout and the sorted-
@@ -172,14 +173,15 @@ object CorpusStore {
   def compact(spark: SparkSession, dir: String,
               idCol: String = "doc_id"): Unit =
       StoreMaintenance.lockFor(dir).synchronized {
-    val gone = retired(spark, dir).localCheckpoint(true)
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val gone = scope.checkpoint(retired(spark, dir))
     StoreCompaction.rewritePartitioned(spark, s"$dir/docs", "shard")(
       _.join(broadcast(gone.withColumnRenamed("doc_id", idCol)),
           Seq(idCol), "left_anti")
         .repartition(col("shard")).sortWithinPartitions(col(idCol)))
     StoreCompaction.clearTable(spark, s"$dir/retired")
     graft.operators.TransientCache.drainPath(dir)
-  }
+  }}
 
   private def physicalDocs(spark: SparkSession, dir: String): DataFrame =
     StoreCompaction.read(spark, s"$dir/docs")

@@ -69,16 +69,16 @@ final class DedupIndexStore(val dir: String, spark: SparkSession) {
     */
   def retire(docIds: DataFrame, idCol: String): Unit =
       StoreMaintenance.lockFor(dir).synchronized {
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
     val target = StoreCompaction.appendTarget(spark, s"$dir/retired")
-    docIds.select(col(idCol).as("doc_id")).distinct()
-      .join(broadcast(retired.select("doc_id")), Seq("doc_id"), "left_anti")
-      // materialize BEFORE the append: the anti-join reads the very table
-      // the write appends to (self-referencing append otherwise)
-      .localCheckpoint(true)
+    // materialize BEFORE the append: the anti-join reads the very table
+    // the write appends to (self-referencing append otherwise)
+    scope.checkpoint(docIds.select(col(idCol).as("doc_id")).distinct()
+      .join(broadcast(retired.select("doc_id")), Seq("doc_id"), "left_anti"))
       .write.mode(SaveMode.Append).parquet(target)
     spark.catalog.refreshByPath(target)
     graft.operators.TransientCache.drainPath(dir)
-  }
+  }}
 
   /** One-read family metadata — (n, numHashes, bands, builtThreshold,
     * autoPlanned). The adopt-time faces need all of it, and each separate
@@ -119,8 +119,9 @@ final class DedupIndexStore(val dir: String, spark: SparkSession) {
 
   private def writeDocs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, numHashes: Int, nBands: Int,
-                        mode: SaveMode): Unit = {
-    val base = docs
+                        mode: SaveMode): Unit =
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val base = scope.persist(docs
       .select(col(idCol).as("doc_id"), shingleSet(col(textCol), n).as("sh"))
       .where(size(col("sh")) > 0)
       // CPU-density guard (round-14, the crossCorpusPairsIndexed
@@ -128,10 +129,8 @@ final class DedupIndexStore(val dir: String, spark: SparkSession) {
       // over this cache, and a small corpus arrives as a 1-2 partition
       // scan — spread it at the session's scale knob before caching
       .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
-      .cache() // feeds both tables; one shingle pass over the batch
+        col("doc_id"))) // feeds both tables; one shingle pass over the batch
     writeShingled(base, numHashes, nBands, mode)
-    base.unpersist()
   }
 
   /** The write half over PRE-SHINGLED cached sets — shared by [[writeDocs]]
@@ -168,7 +167,7 @@ final class DedupIndexStore(val dir: String, spark: SparkSession) {
       spark.catalog.refreshByPath(shTarget)
       graft.operators.TransientCache.drainPath(dir)
     }
-    // base's persist lifecycle belongs to the caller (writeDocs / build)
+    // base's lifetime belongs to the caller's scope (writeDocs / build)
   }
 
   /** Admit a new batch into an existing index (parquet append). When the
@@ -220,7 +219,8 @@ final class DedupIndexStore(val dir: String, spark: SparkSession) {
     */
   def compact(replan: Boolean = true): Unit =
       StoreMaintenance.lockFor(dir).synchronized {
-    val gone = retired.select("doc_id").localCheckpoint(true)
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val gone = scope.checkpoint(retired.select("doc_id"))
     def liveShingles = StoreCompaction.read(spark, s"$dir/shingles")
       .join(broadcast(gone), Seq("doc_id"), "left_anti")
     val (n0, h0, b0, thr0, auto0) = familyMeta
@@ -261,7 +261,7 @@ final class DedupIndexStore(val dir: String, spark: SparkSession) {
         .repartition(col("doc_id")))
     StoreCompaction.clearTable(spark, s"$dir/retired")
     graft.operators.TransientCache.drainPath(dir)
-  }
+  }}
 }
 
 /** Shared MVCC write/read primitive for the persisted-store tables — the
@@ -687,18 +687,18 @@ object DedupIndexStore {
             idCol: String, textCol: String, n: Int = 3, numHashes: Int = 128,
             bands: Int = 32, threshold: Double = 0.8,
             candidateBudget: Long = 100_000_000_000L,
-            force: Boolean = false): DedupIndexStore = {
+            force: Boolean = false): DedupIndexStore =
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
     // ONE shingle pass (round-13): the auto-planner's pair-similarity
     // sample and the index write both start from the shingle sets, and
     // computing them separately shingled the full corpus twice per build
-    val base = docs
+    val base = scope.persist(docs
       .select(col(idCol).as("doc_id"), shingleSet(col(textCol), n).as("sh"))
       .where(size(col("sh")) > 0)
       // CPU-density guard — see writeDocs: the build's signing pass and
       // the auto-planner's pairwise sample both run over this cache
       .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
-      .cache()
+        col("doc_id")))
     val (h, b) =
       if (numHashes > 0) (numHashes, bands)
       else {
@@ -741,7 +741,7 @@ object DedupIndexStore {
     require(h % b == 0, s"bands must divide numHashes")
     val store = new DedupIndexStore(dir, spark)
     store.writeShingled(base, h, b, SaveMode.Overwrite)
-    base.unpersist()
+    scope.release()
     import spark.implicits._
     // threshold persists alongside the family: the plan was priced FOR
     // this threshold, and adopt-time readers warn when querying at a

@@ -85,10 +85,12 @@ final class SearchIndexStore(val dir: String, spark: SparkSession) {
     */
   def retire(docIds: DataFrame, idCol: String): Unit =
       StoreMaintenance.lockFor(dir).synchronized {
-    val gone = doclens // live view: already-retired ids drop out here
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    // live view: already-retired ids drop out here; two consumers, and
+    // severed before we write
+    val gone = scope.checkpoint(doclens
       .join(docIds.select(col(idCol).as("doc_id")).distinct(), Seq("doc_id"),
-        "left_semi")
-      .localCheckpoint(true) // two consumers; sever before we write
+        "left_semi"))
     val r = gone.agg(count(lit(1)), sum("dl")).head()
     if (r.getLong(0) > 0) {
       val target = StoreCompaction.appendTarget(spark, s"$dir/retired")
@@ -102,7 +104,7 @@ final class SearchIndexStore(val dir: String, spark: SparkSession) {
           .toDF("n_docs", "sum_dl"))
     }
     graft.operators.TransientCache.drainPath(dir)
-  }
+  }}
 
   /** (n_docs, sum_dl) — the maintained corpus scalars. */
   def stats: (Long, Double) = {
@@ -116,7 +118,8 @@ final class SearchIndexStore(val dir: String, spark: SparkSession) {
   def append(docs: DataFrame, idCol: String, textCol: String,
              autoCompactFiles: Int = StoreCompaction.AutoCompactFiles): Unit =
       StoreMaintenance.lockFor(dir).synchronized {
-    val base = SearchIndexStore.tokenized(docs, idCol, textCol).cache()
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val base = scope.persist(SearchIndexStore.tokenized(docs, idCol, textCol))
     val pTarget = StoreCompaction.appendTarget(spark, s"$dir/postings")
     val dTarget = StoreCompaction.appendTarget(spark, s"$dir/doclens")
     SearchIndexStore.postingsOf(base)
@@ -126,7 +129,7 @@ final class SearchIndexStore(val dir: String, spark: SparkSession) {
     spark.catalog.refreshByPath(pTarget)
     spark.catalog.refreshByPath(dTarget)
     val add = base.agg(count(lit(1)), sum("dl")).head()
-    base.unpersist()
+    scope.release()
     val (n0, s0) = stats
     import spark.implicits._
     StoreCompaction.swapIn(spark, s"$dir/meta",
@@ -137,7 +140,7 @@ final class SearchIndexStore(val dir: String, spark: SparkSession) {
     StoreCompaction.maybeAutoCompact(spark, s"$dir/postings",
       autoCompactFiles, "SearchIndexStore")(compact())
     ()
-  }
+  }}
 
   /** BM25 top-k over the stored index: postings pruned to the query
     * terms, document frequencies from the pruned postings, scalars from
@@ -215,7 +218,8 @@ final class SearchIndexStore(val dir: String, spark: SparkSession) {
     * tombstone that outlives its purged rows anti-joins nothing.
     */
   def compact(): Unit = StoreMaintenance.lockFor(dir).synchronized {
-    val gone = retired.select("doc_id").localCheckpoint(true)
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val gone = scope.checkpoint(retired.select("doc_id"))
     StoreCompaction.rewrite(spark, s"$dir/postings")(
       _.join(broadcast(gone), Seq("doc_id"), "left_anti")
         .repartition(col("term")).sortWithinPartitions("term"))
@@ -224,7 +228,7 @@ final class SearchIndexStore(val dir: String, spark: SparkSession) {
         .repartition(col("doc_id")))
     StoreCompaction.clearTable(spark, s"$dir/retired")
     graft.operators.TransientCache.drainPath(dir)
-  }
+  }}
 }
 
 object SearchIndexStore {
@@ -241,8 +245,9 @@ object SearchIndexStore {
 
   /** Build (overwrite) the index from a corpus. */
   def build(spark: SparkSession, dir: String, docs: DataFrame,
-            idCol: String, textCol: String): SearchIndexStore = {
-    val base = tokenized(docs, idCol, textCol).cache()
+            idCol: String, textCol: String): SearchIndexStore =
+      scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+    val base = scope.persist(tokenized(docs, idCol, textCol))
     // builds publish through the generational flip too: a rebuild over a
     // dir that was ever compacted must not strand legacy files beside
     // live generation dirs
@@ -250,7 +255,7 @@ object SearchIndexStore {
     StoreCompaction.swapIn(spark, s"$dir/doclens",
       base.select("doc_id", "dl"))
     val t = base.agg(count(lit(1)), sum("dl")).head()
-    base.unpersist()
+    scope.release()
     import spark.implicits._
     StoreCompaction.swapIn(spark, s"$dir/meta",
       Seq((t.getLong(0), t.getAs[Double](1))).toDF("n_docs", "sum_dl"))

@@ -74,8 +74,10 @@ object TokenizerStore {
 
 final class TokenizerStore(val dir: String, spark: SparkSession) {
 
-  private lazy val table: DataFrame =
-    StoreCompaction.read(spark, s"$dir/merges").cache()
+  // registered, so the batch scope that read the store (or a path drain
+  // over `dir`) reclaims the cache
+  private lazy val table: DataFrame = graft.operators.TransientCache.cache(
+    StoreCompaction.read(spark, s"$dir/merges"))
 
   /** The stored tokenizer family ([[TokenizerStore.KindBpe]] /
     * [[TokenizerStore.KindWordPiece]]); one distinct value by

@@ -29,23 +29,22 @@ object StreamingAnnIndex {
     * batch caller that wants guarded (idempotent) admission.
     */
   def admitBatch(batch: DataFrame, dir: String, idCol: String,
-                 vecCol: String): Long = {
-    val scope = graft.operators.TransientCache.beginScope()
-    try {
-    // NOT wrapped in the curation twin's withMicroBatchPlanning: measured
-    // (round 14, same-session A/B at sf0.1) ann_ivf_stream 4.7 → 9.2 s
-    // with AQE off + batch-sized shuffle partitions around the admissions
-    // — the vector admission's window/append stages NEED AQE's runtime
-    // coalescing (whole-gate AQE-off GateProf: 12.7-17.5 s vs 4.5-7.1 s
-    // with AQE on). The curation chain's text stages are where the re-plan
-    // floor dominates; here it does not.
+                 vecCol: String): Long =
+    // NO micro-batch planning in this batch scope: measured (round 14, same-session A/B
+    // at sf0.1) ann_ivf_stream 4.7 → 9.2 s with AQE off + batch-sized
+    // shuffle partitions around the admissions — the vector admission's
+    // window/append stages NEED AQE's runtime coalescing (whole-gate
+    // AQE-off GateProf: 12.7-17.5 s vs 4.5-7.1 s with AQE on). The curation
+    // chain's text stages are where the re-plan floor dominates; here it
+    // does not.
+    scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
     val store = new AnnIndexStore(dir, batch.sparkSession)
-    // localCheckpoint severs the plan's store dependency BEFORE append
+    // the checkpoint severs the plan's store dependency BEFORE append
     // writes into the cells table the anti-join is reading
     // (self-referencing append otherwise)
-    val fresh = batch.join(
+    val fresh = scope.checkpoint(batch.join(
       store.admittedVids.select(col("vid").as(idCol)),
-      Seq(idCol), "left_anti").localCheckpoint(true)
+      Seq(idCol), "left_anti"))
     val n = fresh.count()
     // drop operator caches over THIS store before the mutation
     // (TransientCache scaladoc) — path-scoped so warm caches of unrelated
@@ -53,14 +52,7 @@ object StreamingAnnIndex {
     // the guard's own anti-join fragment must go before the write starts
     graft.operators.TransientCache.drainPath(dir)
     if (n > 0) store.append(fresh, idCol, vecCol)
-    graft.operators.TransientCache.drainScope(scope)
     n
-    } catch { case t: Throwable =>
-      // a failed admission (the stream will retry it) must not leave its
-      // fragments registered for the replay to substitute
-      graft.operators.TransientCache.drainScope(scope)
-      throw t
-    }
   }
 
   /** Writer admitting each micro-batch of `embs` (idCol, vecCol columns)

@@ -1,10 +1,10 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.pipeline.{CurationPipeline, Dedup}
+import graft.pipeline.CurationPipeline
 import graft.store.{CorpusStore, DedupIndexStore}
 
 /** Continuous curation ingest — the streaming twin of the composed batch
@@ -50,21 +50,17 @@ object StreamingCuration {
                    benchmark: DataFrame, benchTextCol: String,
                    index: DedupIndexStore, publishDir: String,
                    cfg: CurationPipeline.Config = CurationPipeline.Config(),
-                   aqeOffBelowBytes: Long = 256L << 20): Long = {
-    val scope = graft.operators.TransientCache.beginScope()
-    // hoisted out of the try: an ABORTED batch must free the eager
-    // stage-boundary checkpoints it materialized (the catch below) — a
-    // retried batch re-checkpoints fresh frames, so leaked blocks would
-    // accumulate per failure in a long-lived stream
-    val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    try {
+                   aqeOffBelowBytes: Long = 256L << 20): Long =
+    // the batch scope: micro-batch planning below the size threshold (at
+    // this scale the ~50 sequential AQE stage-jobs' fixed latency IS the
+    // admission wall — measured 19.4 -> 11.5 s per sf0.1 batch; 0 disables
+    // the switch), the stage checkpoints and the batch's operator
+    // fragments all end with it — a failed micro-batch (the stream will
+    // retry it) leaves no blocks pinned and nothing registered for the
+    // replay to substitute
+    scala.util.Using.resource(
+        graft.operators.BatchScope(batch, aqeOffBelowBytes)) { scope =>
     val spark = batch.sparkSession
-    // micro-batch planning mode: below the size threshold the admission
-    // runs without AQE — at this scale the ~50 sequential AQE stage-jobs'
-    // fixed latency IS the admission wall (see
-    // CurationPipeline.withMicroBatchPlanning; measured 19.4 -> 11.5 s
-    // per sf0.1 batch). 0 disables the switch.
-    CurationPipeline.withMicroBatchPlanning(spark, batch, aqeOffBelowBytes) {
     // an empty-seeded store has no doc files yet (partitioned write of
     // zero rows), so the published-ids read would fail schema inference —
     // and nothing can need guarding. Probe the filesystem, not the
@@ -77,34 +73,20 @@ object StreamingCuration {
     else batch.join(
       CorpusStore.docs(spark, publishDir).select(col("doc_id").as(idCol)),
       Seq(idCol), "left_anti")
-    // stage boundaries are eager LOCAL CHECKPOINTS here, not the batch
-    // face's lazy persists (round-14, VERDICT item 2): a micro-batch
-    // admission's wall is the DRIVER, not the executors — measured
-    // (OPTIMIZATION_r14.md "td_curation_stream / td_pipeline_e2e") 9.3 s
-    // of the 16.5 s steady-state batch spent BETWEEN jobs,
-    // re-analyzing the composed plan (scrub → filter → exact → cross-index
-    // → minhash self-join → label rounds) for every eager operator action
-    // (~32 per admission; Catalyst analysis cost grows with plan depth). A
-    // checkpointed boundary is a LogicalRDD leaf, so every downstream
-    // action analyzes a plan truncated at the previous stage instead of
-    // the whole chain. Same materialization work as the persists (each
-    // stage output was computed exactly once either way), same severing of
-    // the store reads; blocks are freed via LocalCp.free once the batch's
-    // survivors are checkpointed (Dataset.unpersist is a no-op for
-    // checkpointed frames).
-    val persistStage = { (_: String) => (df: DataFrame) =>
-      val p = df.localCheckpoint(true)
-      live += p
-      p
-    }
-    val survivors = CurationPipeline.cleanedPlan(fresh, idCol, textCol,
-        benchmark, benchTextCol, index, cfg, persistStage)
-      .select("doc_id", "text")
+    // stage boundaries are eager checkpoints here in either planning mode
+    // (round-14, VERDICT item 2): an admission's wall is the DRIVER
+    // re-analyzing the composed plan for every eager operator action — 9.3
+    // s of the 16.5 s steady-state batch BETWEEN jobs (OPTIMIZATION_r14.md
+    // "td_curation_stream / td_pipeline_e2e") — and a checkpointed boundary
+    // truncates that analysis at the previous stage (see BatchScope.stage)
+    val survivors = scope.checkpoint(CurationPipeline.cleanedPlan(fresh,
+        idCol, textCol, benchmark, benchTextCol, index, cfg,
+        _ => scope.checkpoint)
       // the plan reads BOTH stores (published ids + band index) and the
       // admission below writes into them — sever before writing
-      .localCheckpoint(true)
+      .select("doc_id", "text"))
     val n = survivors.count()
-    live.foreach(graft.operators.LocalCp.free(_))
+    scope.release(keep = survivors)
     // drop the dedup operators' internal cached fragments over the two
     // stores NOW, before the mutations below: left registered, a LATER
     // batch's matching plan would substitute them and — once their blocks
@@ -118,20 +100,7 @@ object StreamingCuration {
       CorpusStore.append(spark, publishDir, survivors, "doc_id", "text")
       index.append(survivors, "doc_id", "text")
     }
-    // end the batch's fragment lifecycle: survivors are checkpointed and
-    // the stores final, so nothing may linger into the next micro-batch
-    // (a later RDD sweep would turn it into a recompute-per-use trap)
-    graft.operators.TransientCache.drainScope(scope)
     n
-    }
-    } catch { case t: Throwable =>
-      // a failed micro-batch (the stream will retry it) must not leave its
-      // fragments registered for the replay to substitute, nor its eager
-      // stage checkpoints' blocks pinned
-      live.foreach(df => scala.util.Try(graft.operators.LocalCp.free(df)))
-      graft.operators.TransientCache.drainScope(scope)
-      throw t
-    }
   }
 
   /** Writer curating + publishing each micro-batch of `docs`. Both stores

@@ -23,6 +23,23 @@ import graft.store.SearchIndexStore
   */
 object StreamingSearchIndex {
 
+  /** Admit one batch under the replay guard — the writer's batch body.
+    * The scope frees the guard's checkpoint on every path.
+    */
+  private[graft] def admitBatch(batch: DataFrame, dir: String, idCol: String,
+                                textCol: String): Unit =
+    scala.util.Using.resource(graft.operators.BatchScope()) { scope =>
+      val store = new SearchIndexStore(dir, batch.sparkSession)
+      // the checkpoint severs the plan's store dependency BEFORE append
+      // writes into those tables — an un-materialized anti-join would
+      // re-list the very files the append is creating (self-referencing
+      // append, undefined results)
+      val fresh = scope.checkpoint(batch.join(
+        store.admittedDocIds.select(col("doc_id").as(idCol)),
+        Seq(idCol), "left_anti"))
+      if (!fresh.isEmpty) store.append(fresh, idCol, textCol)
+    }
+
   /** Writer admitting each micro-batch of `docs` (idCol, textCol columns)
     * into the index at `dir` (must exist — [[SearchIndexStore.build]]).
     */
@@ -31,17 +48,7 @@ object StreamingSearchIndex {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val store = new SearchIndexStore(dir, batch.sparkSession)
-          // localCheckpoint severs the plan's store dependency BEFORE
-          // append writes into those tables — an un-materialized anti-join
-          // would re-list the very files the append is creating
-          // (self-referencing append, undefined results)
-          val fresh = batch.join(
-            store.admittedDocIds.select(col("doc_id").as(idCol)),
-            Seq(idCol), "left_anti").localCheckpoint(true)
-          if (!fresh.isEmpty) store.append(fresh, idCol, textCol)
-        }
+        if (!batch.isEmpty) admitBatch(batch, dir, idCol, textCol)
         ()
       }
 

@@ -1,4 +1,4 @@
-package com.example.if
+package com.example.`if`
 
 data class IfConfig(val verbose: Boolean, val level: Int)
 

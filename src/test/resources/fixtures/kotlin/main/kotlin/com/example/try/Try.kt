@@ -1,4 +1,4 @@
-package com.example.try
+package com.example.`try`
 
 data class TryConfig(val path: String)
 

@@ -228,7 +228,7 @@ class IndexerSpec extends SparkSpec {
   }
 
   test("graphx bridge: khop + degrees") {
-    val g = graft.graph.GraphOps.toGraph(store)
+    val g = graft.graph.GraphOps.toTopology(store)
     assert(g.vertices.count() ==
       store.directories.count() + store.files.count() +
         store.definitions.count() + store.importedSymbols.count())
@@ -237,7 +237,7 @@ class IndexerSpec extends SparkSpec {
     val reach = graft.graph.GraphOps.kHopFrom(g, start, 5)
     assert(reach(start) == 0)
     assert(reach.size > 1) // main → auth import → ...
-    val deg = graft.graph.GraphOps.degreeByKind(spark, store).collect()
+    val deg = graft.graph.GraphOps.degreeByKindOf(g, spark).collect()
     assert(deg.nonEmpty)
   }
 }

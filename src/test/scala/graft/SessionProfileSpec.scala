@@ -29,7 +29,8 @@ class SessionProfileSpec extends AnyFunSuite {
 
   test("removed session and checkpoint knobs are not read from the environment") {
     val knobs = Seq("SPARK_GRAFT_MIN_PARTITION_SIZE", "SPARK_GRAFT_CODEGEN_CACHE",
-      "GRAFT_FREE_CHECKPOINTS", "SPARK_GRAFT_AQE", "SPARK_GRAFT_PROF_PLAN")
+      "GRAFT_FREE_CHECKPOINTS", "SPARK_GRAFT_AQE", "SPARK_GRAFT_PROF_PLAN",
+      "GRAFT_GRAPH_STORAGE")
     val read = ("""(?:sys\.env|System\.getenv)[\w.]*\(\s*"(""" +
       knobs.mkString("|") + """)\w*"""").r
     val hits = for {

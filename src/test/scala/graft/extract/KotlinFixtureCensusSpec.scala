@@ -14,8 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `val ExtendMe.extend` and `val ExtendMe.reversed`, interface methods
   * (abstract and default), a top-level property, and packages whose last
   * segment is the soft keyword `if`, `try` or `when`. Those segments are
-  * written bare, the form the extractor's package rule reads; kotlinc
-  * would reject them and needs backticks (`` package com.example.`if` ``).
+  * backquoted, the form kotlinc requires (`` package com.example.`if` ``);
+  * the extractor strips the quotes, so the FQNs below read `com.example.if`.
   *
   * No Kotlin parser exists on this box (no kotlinc, no embeddable K2, no
   * tree-sitter CLI, empty cargo registry, zero egress — probes recorded in

@@ -236,6 +236,33 @@ class OtherExtractorsSpec extends AnyFunSuite {
     assert(e.imports.exists(_.importType == "wildcard_import"))
   }
 
+  test("kotlin: a backquoted package segment is read without its quotes") {
+    val f = SourceFile("If.kt", "/If.kt", "r", "If.kt", "kt", "kotlin",
+      """package com.example.`if`
+        |
+        |data class IfConfig(val verbose: Boolean)
+        |fun ifTypeInference() { }
+        |""".stripMargin)
+    val e = KotlinExtractor.extract(f)
+    assert(e.definitions.map(_.fqn).toSet ==
+      Set("com.example.if.IfConfig", "com.example.if.ifTypeInference"))
+    assert(e.typeFacts.filter(_.factKind == "package").map(_.detail) ==
+      Seq("com.example.if"))
+  }
+
+  test("kotlin: a backquoted import segment is read without its quotes") {
+    val f = SourceFile("K.kt", "/K.kt", "r", "K.kt", "kt", "kotlin",
+      """import com.example.`when`.Config
+        |import com.example.`try`.TryConfig as `Tc`
+        |import com.example.`if`.*
+        |""".stripMargin)
+    val e = KotlinExtractor.extract(f)
+    assert(e.imports.map(i => (i.importType, i.importPath, i.alias)) == Seq(
+      ("import", "com.example.when.Config", null),
+      ("import", "com.example.try.TryConfig", "Tc"),
+      ("wildcard_import", "com.example.if", null)))
+  }
+
   test("csharp and rust basics") {
     val cs = CSharpExtractor.extract(SourceFile("P.cs", "/P.cs", "r", "P.cs",
       "cs", "csharp",

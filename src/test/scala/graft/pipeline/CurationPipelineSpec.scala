@@ -287,8 +287,8 @@ class CurationPipelineSpec extends SparkSpec {
     val (aqe, p) = (spark.conf.get(aqeKey), spark.conf.get(pKey))
     assert(p.toInt <= 4, s"test session has $p shuffle partitions")
     val small = Seq(doc(1L, 1)).toDF("doc_id", "text", "source")
-    val inside = CurationPipeline.withMicroBatchPlanning(
-        spark, small, 256L << 20) {
+    val inside = scala.util.Using.resource(
+        graft.operators.BatchScope(small, 256L << 20)) { _ =>
       (spark.conf.get(aqeKey), spark.conf.get(pKey))
     }
     assert(inside == ("false", p))

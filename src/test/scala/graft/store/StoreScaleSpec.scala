@@ -100,7 +100,8 @@ class StoreScaleSpec extends SparkSpec {
   }
 
   test("pagerank: module hubs rank above leaves") {
-    val pr = graft.graph.GraphOps.pageRank(spark, store, iters = 8).collect()
+    val pr = graft.graph.GraphOps.pageRankOf(
+      graft.graph.GraphOps.toTopology(store), spark, iters = 8).collect()
     assert(pr.nonEmpty)
     // chain 0->1->...->99: rank grows along the chain; tail ranks highest
     val defRanks = pr.filter(_.getLong(0) == graft.model.NodeTag.Definition)
