@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-import graft.query.QueryLibrary
-import graft.store.GraphStore
+import graft.serve.{ServedQueries, ServedStore}
 
 /** HTTP graph-explorer facade over [[QueryLibrary]] — the serving face of
   * the reference's `crates/http-server-desktop/src/endpoints/`
@@ -47,8 +46,15 @@ import graft.store.GraphStore
   * (`DirectoryNode`, …). `total_relationships` deliberately excludes
   * imported-symbol relationships, replicating graph_stats.rs:204-206.
   *
-  * Serving shape (same as [[McpServer]]): one long-lived SparkSession over
-  * a cached GraphStore; every request is a bounded QueryLibrary program.
+  * Serving shape (same as [[McpServer]]): one long-lived SparkSession and
+  * one [[ServedStore]] over the store directory. The four graph routes ask
+  * the store's current generation for their rows: a store of at most
+  * [[ServedStore.IndexBoundBytes]] of Parquet is answered from a
+  * driver-resident [[graft.serve.ServingIndex]] with no Spark job per
+  * request; a larger one by the bounded QueryLibrary program over the
+  * cached store. Both give the same rows, so the JSON below is assembled
+  * once for both. A rewrite of the store directory (a reindex into it) is
+  * picked up by the next request.
   * The JDK's built-in `com.sun.net.httpserver` carries the protocol — no
   * dependencies beyond the JDK.
   *
@@ -82,21 +88,26 @@ object GraphHttpServer {
   }
 }
 
-final class GraphHttpServer(spark: SparkSession, storeDir: String,
-    workspaceFolderPath: String, projectPath: String,
-    dataDir: String = java.nio.file.Files
-      .createTempDirectory("graft-ws-data").toString,
-    // deployed-mode bearer auth (http-server-deployed): when a secret file
-    // is configured, every route except /health and /metrics requires a
-    // valid HS256 JWT. Default: desktop mode, no auth (the reference's
-    // desktop server has none either).
-    jwtSecretPath: Option[String] = sys.env.get("GRAFT_JWT_SECRET_FILE")) {
+final class GraphHttpServer private[graft] (spark: SparkSession,
+    storeDir: String, workspaceFolderPath: String, projectPath: String,
+    dataDir: String, jwtSecretPath: Option[String], served: ServedStore) {
   import GraphHttpServer._
+
+  def this(spark: SparkSession, storeDir: String,
+      workspaceFolderPath: String, projectPath: String,
+      dataDir: String = java.nio.file.Files
+        .createTempDirectory("graft-ws-data").toString,
+      // deployed-mode bearer auth (http-server-deployed): when a secret file
+      // is configured, every route except /health and /metrics requires a
+      // valid HS256 JWT. Default: desktop mode, no auth (the reference's
+      // desktop server has none either).
+      jwtSecretPath: Option[String] = sys.env.get("GRAFT_JWT_SECRET_FILE")) =
+    this(spark, storeDir, workspaceFolderPath, projectPath, dataDir,
+      jwtSecretPath, new ServedStore(spark, storeDir))
 
   private val auth: Option[graft.serve.JwtAuth] =
     jwtSecretPath.map(new graft.serve.JwtAuth(_))
 
-  private val lib = new QueryLibrary(GraphStore.read(spark, storeDir).cacheAll())
   private var httpServer: com.sun.net.httpserver.HttpServer = _
   private var boundPort: Int = 0
   private val closing = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -233,7 +244,8 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
     val params = parseQuery(rawQuery)
     (method, segs) match {
       case ("GET", Seq("health")) => (200, "") // health.rs: bare 200
-      case ("GET", Seq("metrics")) => (200, metrics.render) // metrics.rs:8-18
+      case ("GET", Seq("metrics")) => // metrics.rs:8-18
+        (200, metrics.render + metrics.renderServing(served))
       case ("GET", Seq("info")) =>
         (200, JsonMethods.compact(JsonMethods.render(JObject(
           "port" -> JInt(boundPort), "version" -> JString(Version)))))
@@ -331,25 +343,22 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
 
   // ---- endpoints ----------------------------------------------------------
 
-  /** Client-supplied limits are clamped to [0, MaxLimit]: every endpoint
-    * assembles its response by collecting the (limit-bounded) result on the
-    * long-lived server process, so a huge or negative query-string limit
-    * must never reach the query layer as-is.
+  /** A query-string limit, clamped as every served limit is
+    * ([[ServedQueries.clampLimit]]).
     */
-  private val MaxLimit = 10000
   private def clampLimit(params: Map[String, String], k: String, d: Int): Int =
-    math.min(math.max(params.get(k).flatMap(_.toIntOption).getOrElse(d), 0), MaxLimit)
+    ServedQueries.clampLimit(params.get(k).flatMap(_.toIntOption).getOrElse(d))
 
   /** graph_initial.rs:99-230 — the Q7 bounded whole-graph snapshot, limits
     * from the query string (handler defaults 100/200/500/50).
     */
   private def initial(params: Map[String, String]): (Int, String) = {
     def limit(k: String, d: Int) = clampLimit(params, k, d)
-    val rows = lib.initialProjectGraph(
+    val rows = served.queries().initialProjectGraph(
       directoryLimit = limit("directory_limit", 100),
       fileLimit = limit("file_limit", 200),
       definitionLimit = limit("definition_limit", 500),
-      importedSymbolLimit = limit("imported_symbol_limit", 50)).collect()
+      importedSymbolLimit = limit("imported_symbol_limit", 50))
     val nodes = rows.flatMap { r =>
       Seq((r.getAs[String]("src_kind"), r.getAs[Long]("source_id"),
             r.getAs[String]("src_label")),
@@ -371,7 +380,7 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
     val nodeId = nodeIdRaw.toLongOption.getOrElse(
       return (400, statusJson("invalid_node_id")))
     val limit = clampLimit(params, "limit", 100)
-    val rows = lib.nodeNeighbors(kind, nodeId, limit).collect()
+    val rows = served.queries().nodeNeighbors(kind, nodeId, limit)
     val selfId = ref(kind, nodeId)
     val nodes = rows.map { r =>
       (r.getAs[String]("neighbor_kind"), r.getAs[Long]("neighbor_id"),
@@ -399,7 +408,7 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
     val term = params.getOrElse("search_term", "")
     if (term.trim.isEmpty) return (400, statusJson("empty_search_term"))
     val limit = clampLimit(params, "limit", 100)
-    val nodes = lib.searchNodes(term, limit).collect().map { r =>
+    val nodes = served.queries().searchNodes(term, limit).map { r =>
       val kind = r.getAs[String]("node_type")
       JObject("id" -> JString(ref(kind, r.getAs[Long]("node_id"))),
         "node_id" -> JLong(r.getAs[Long]("node_id")),
@@ -415,7 +424,7 @@ final class GraphHttpServer(spark: SparkSession, storeDir: String,
     * reference's relationship tables (dir/file/def/imp edge families).
     */
   private def stats(): (Int, String) = {
-    val r = lib.graphStats().collect().head
+    val r = served.queries().graphStats()
     def c(name: String) = r.getAs[Long](name)
     val dirRels = c("DIR_TO_DIR") + c("DIR_TO_FILE")
     val fileRels = c("FILE_TO_DEF") + c("FILE_TO_IMP")

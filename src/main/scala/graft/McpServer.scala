@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.query.QueryLibrary
-import graft.store.GraphStore
+import graft.serve.{ServedQueries, ServedStore}
 
 /** MCP (Model Context Protocol) stdio facade over [[QueryLibrary]] — the
   * serving face of the reference's `crates/mcp` (rmcp-based stdio server,
@@ -16,9 +16,18 @@ import graft.store.GraphStore
   *
   * Usage: graft.McpServer <storeDir>
   *
-  * Serving shape: one long-lived SparkSession + cached GraphStore; every
-  * request is a bounded query (explicit LIMITs) against the cached store —
-  * the MIGRATION.md `gkg server` row made concrete.
+  * Serving shape: one long-lived SparkSession + one [[ServedStore]] over
+  * the store directory — the MIGRATION.md `gkg server` row made concrete.
+  * `search_codebase_definitions`, `read_definitions` and `repo_map` ask the
+  * store's current generation: a store of at most
+  * [[ServedStore.IndexBoundBytes]] of Parquet answers them from a
+  * driver-resident [[graft.serve.ServingIndex]] with no Spark job, a larger
+  * one with the bounded QueryLibrary program over the cached store; the
+  * rows are the same either way. The other tools run their QueryLibrary
+  * program over the same generation. Every skip/limit is clamped to
+  * [0, [[ServedQueries.MaxLimit]]] first, as the HTTP face clamps its
+  * limits. A rewrite of the store (an `index_project` into it, a reindex
+  * by another process) is picked up by the next call.
   *
   * Trust boundary: the transport is LOCAL STDIO, the same trust model as
   * the reference's rmcp stdio server — the client already runs as this
@@ -31,7 +40,6 @@ import graft.store.GraphStore
 object McpServer {
 
   val ProtocolVersion = "2024-11-05"
-  private val MaxRows = 200
 
   def main(args: Array[String]): Unit = {
     val storeDir = args.headOption.getOrElse(
@@ -68,8 +76,12 @@ object McpServer {
       Seq("workspace_dir" -> "string"), Nil))
 }
 
-final class McpServer(spark: SparkSession, storeDir: String,
-    rootConfinement: Option[String] = sys.env.get("GRAFT_MCP_ROOT")) {
+final class McpServer private[graft] (spark: SparkSession,
+    rootConfinement: Option[String], served: ServedStore) {
+
+  def this(spark: SparkSession, storeDir: String,
+      rootConfinement: Option[String] = sys.env.get("GRAFT_MCP_ROOT")) =
+    this(spark, rootConfinement, new ServedStore(spark, storeDir))
 
   /** Normalize + prefix-check a caller-supplied path when a confinement
     * root is configured (see the trust-boundary note above).
@@ -85,8 +97,6 @@ final class McpServer(spark: SparkSession, storeDir: String,
   }
   import McpServer._
   implicit private val formats: Formats = DefaultFormats
-
-  private var lib = new QueryLibrary(GraphStore.read(spark, storeDir).cacheAll())
 
   /** One JSON-RPC request line → optional response line (notifications get
     * none). Never throws: malformed input and tool failures become JSON-RPC
@@ -136,38 +146,41 @@ final class McpServer(spark: SparkSession, storeDir: String,
   private def callTool(name: String, args: JValue): JObject = {
     def str(k: String) = (args \ k).extractOpt[String]
     def int(k: String, d: Int) = (args \ k).extractOpt[Int].getOrElse(d)
+    def bounded(k: String, d: Int) = ServedQueries.clampLimit(int(k, d))
     def arr(k: String) = (args \ k).extractOpt[Seq[String]].getOrElse(Nil)
-    val df: DataFrame = name match {
+    def library(df: QueryLibrary => DataFrame) =
+      ServedQueries.jsonRows(df(served.library()))
+    val rows: Array[String] = name match {
       case "search_codebase_definitions" =>
-        lib.searchDefinitions(arr("terms"), int("skip", 0), int("limit", 50))
+        served.queries().searchDefinitions(arr("terms"), bounded("skip", 0),
+          bounded("limit", 50))
       case "get_references" =>
-        lib.getReferences(str("name").getOrElse(""), str("path").getOrElse(""),
-          skip = int("skip", 0), limit = int("limit", 50))
+        library(_.getReferences(str("name").getOrElse(""), str("path").getOrElse(""),
+          skip = bounded("skip", 0), limit = bounded("limit", 50)))
       case "read_definitions" =>
-        lib.readDefinitions(str("name").getOrElse(""), str("path").getOrElse(""))
+        served.queries().readDefinitions(str("name").getOrElse(""),
+          str("path").getOrElse(""))
       case "repo_map" =>
-        lib.repoMap(arr("file_paths"), int("skip", 0), int("limit", 200))
+        served.queries().repoMap(arr("file_paths"), bounded("skip", 0),
+          bounded("limit", 200))
       case "get_definition" =>
-        lib.definitionAt(str("path").getOrElse(""), int("line", 0), int("col", 0))
+        library(_.definitionAt(str("path").getOrElse(""), int("line", 0), int("col", 0)))
       case "import_usage" =>
-        lib.importUsage(arr("paths").map(_.toLowerCase),
-          str("name"), str("alias"))
+        library(_.importUsage(arr("paths").map(_.toLowerCase),
+          str("name"), str("alias")))
       case "index_project" =>
         val repoDir = confined(str("repo_dir").getOrElse(sys.error("repo_dir required")))
         val out = confined(str("store_dir").getOrElse(sys.error("store_dir required")))
         val store = graft.analyze.Indexer.indexDirectory(spark, repoDir,
           new java.io.File(repoDir).getName)
         store.write(out)
-        if (out == storeDir) // re-serve the fresh index
-          lib = new QueryLibrary(GraphStore.read(spark, storeDir).cacheAll())
-        new QueryLibrary(store).graphStats()
+        ServedQueries.jsonRows(new QueryLibrary(store).graphStats())
       case "list_projects" =>
         val ws = confined(str("workspace_dir").getOrElse(sys.error("workspace_dir required")))
         import spark.implicits._
-        Cli.listProjects(ws).toDF("project")
+        ServedQueries.jsonRows(Cli.listProjects(ws).toDF("project"))
       case other => sys.error(s"unknown tool: $other")
     }
-    val rows = df.limit(MaxRows).toJSON.collect()
     JObject("content" -> JArray(List(JObject(
       "type" -> JString("text"),
       "text" -> JString(rows.mkString("[", ",", "]"))))))

@@ -64,15 +64,8 @@ object SparkEntry {
     */
   private[graft] def memoKey(s: SparkSession, d: String, source: String,
                              variant: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/$source.parquet")
-    val files = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .listFiles(path, true)
-    var (bytes, mtime) = (0L, 0L)
-    while (files.hasNext) {
-      val f = files.next()
-      bytes += f.getLen
-      mtime = math.max(mtime, f.getModificationTime)
-    }
+    val (bytes, mtime) = graft.store.DirFingerprint.of(
+      s.sparkContext.hadoopConfiguration, s"$d/$source.parquet")
     s"$d#$source#$variant#$bytes#$mtime"
   }
 

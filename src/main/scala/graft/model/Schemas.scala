@@ -95,6 +95,18 @@ object EdgeKind {
   val ImpToFile = "IMP_TO_FILE"
   val all: Seq[String] = Seq(DirToDir, DirToFile, FileToDef, FileToImp,
     DefToDef, DefToImp, ImpToImp, ImpToDef, ImpToFile)
+
+  /** kind → (source node kind, target node kind). */
+  val endpoints: Map[String, (String, String)] = Map(
+    DirToDir -> ("directory", "directory"),
+    DirToFile -> ("directory", "file"),
+    FileToDef -> ("file", "definition"),
+    FileToImp -> ("file", "imported_symbol"),
+    DefToDef -> ("definition", "definition"),
+    DefToImp -> ("definition", "imported_symbol"),
+    ImpToImp -> ("imported_symbol", "imported_symbol"),
+    ImpToDef -> ("imported_symbol", "definition"),
+    ImpToFile -> ("imported_symbol", "file"))
 }
 
 /** Node-table tags, used to build GraphX vertex ids:

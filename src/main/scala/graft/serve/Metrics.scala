@@ -113,4 +113,19 @@ final class Metrics {
     }
     sb.result()
   }
+
+  /** The serving-plan families of `s` (a fixed label set: no cap needed):
+    * index builds, answers per plan and the current index's rows.
+    */
+  def renderServing(s: ServedStore): String =
+    "# HELP graft_serving_index_builds_total Serving index builds, one per store generation under the bound\n" +
+    "# TYPE graft_serving_index_builds_total counter\n" +
+    s"graft_serving_index_builds_total ${s.indexBuilds.sum()}\n" +
+    "# HELP graft_serve_answers_total Served lookups by plan: driver-resident index or Spark\n" +
+    "# TYPE graft_serve_answers_total counter\n" +
+    s"""graft_serve_answers_total{path="index"} ${s.indexAnswers.sum()}""" + "\n" +
+    s"""graft_serve_answers_total{path="spark"} ${s.sparkAnswers.sum()}""" + "\n" +
+    "# HELP graft_serving_index_rows Node and edge rows held by the current serving index\n" +
+    "# TYPE graft_serving_index_rows gauge\n" +
+    s"graft_serving_index_rows ${s.indexRows}\n"
 }

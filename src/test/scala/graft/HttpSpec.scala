@@ -315,6 +315,124 @@ class HttpSpec extends SparkSpec {
     assert(poolThreads.isEmpty)
   }
 
+  /** Index a repo of `files` (name -> source) into `store`, overwriting it. */
+  private def indexInto(store: String, files: (String, String)*): Unit = {
+    val repo = Files.createTempDirectory("graft-http-repo")
+    files.foreach { case (f, src) => Files.writeString(repo.resolve(f), src) }
+    graft.analyze.Indexer.indexDirectory(spark, repo.toString, "http-repo")
+      .write(store)
+  }
+
+  /** Replace every file under `store` with those under `from`. */
+  private def replaceFiles(store: String, from: String): Unit = {
+    import java.nio.file.{Path, Paths}
+    val to = Paths.get(store)
+    val old = Files.walk(to)
+    try old.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => if (p != to) Files.delete(p))
+    finally old.close()
+    graft.serve.ServingIndexSpec.copyTree(Paths.get(from), to)
+  }
+
+  /** A server over `store` that answers from the serving index at or below
+    * `bound` Parquet bytes and from Spark above it; driven through route(). */
+  private def servedAt(store: String, bound: Long): GraphHttpServer =
+    new GraphHttpServer(spark, store, "ws", "proj",
+      Files.createTempDirectory("graft-http-data").toString, None,
+      new graft.serve.ServedStore(spark, store, bound))
+
+  private val lib = "lib.py" ->
+    "def helper(x):\n    return x\n\nclass Tool:\n    def run(self):\n        return helper(1)\n"
+
+  for ((plan, bound) <- Seq("spark" -> 0L,
+      "index" -> graft.serve.ServedStore.IndexBoundBytes))
+    test(s"a store rewritten under the server is served anew ($plan plan)") {
+      val store = Files.createTempDirectory("graft-http-rewrite").toString
+      indexInto(store, lib)
+      val s = servedAt(store, bound)
+      try {
+        def stats() = JsonMethods.parse(s.route("/graph/stats/ws/proj", "")._2)
+        def found(term: String) = {
+          val (st, body) = s.route("/graph/search/ws/proj", s"search_term=$term")
+          assert(st == 200, body)
+          (JsonMethods.parse(body) \ "nodes").asInstanceOf[JArray].arr
+            .map(n => (n \ "name").extract[String])
+        }
+        assert((stats() \ "node_counts" \ "file_count").extract[Long] == 1)
+        assert(found("helper").contains("helper"))
+        assert(found("fresh").isEmpty)
+
+        indexInto(store, lib, "fresh.py" -> "def fresh_start():\n    return 1\n")
+        assert((stats() \ "node_counts" \ "file_count").extract[Long] == 2)
+        assert(found("fresh").toSet == Set("fresh.py", "fresh_start"))
+        val (st, body) = s.route("/graph/initial/ws/proj", "")
+        assert(st == 200 && body.contains("fresh_start"), body)
+
+        // a store copied in by another process: no in-process write drains
+        // the caches over the directory, only the changed files tell
+        val other = Files.createTempDirectory("graft-http-other").toString
+        indexInto(other, "a.py" -> "def one():\n    return 1\n",
+          "b.py" -> "def two():\n    return 2\n", "c.py" -> "def three():\n    return 3\n")
+        replaceFiles(store, other)
+        assert((stats() \ "node_counts" \ "file_count").extract[Long] == 3)
+        assert(found("fresh").isEmpty && found("three") == List("three"))
+      } finally s.stop()
+    }
+
+  test("limits: negative, zero and huge values give the same reply on both plans") {
+    val (spark0, index) = (servedAt(storeDir, 0L),
+      servedAt(storeDir, graft.serve.ServedStore.IndexBoundBytes))
+    try {
+      val (_, search) = get("/graph/search/ws/proj?search_term=helper")
+      val id = ((search \ "nodes")(0) \ "node_id").extract[Long]
+      for (limit <- Seq("-1", "-2147483648", "0", "1", "2147483647", "99999999999", "x")) {
+        for ((path, q) <- Seq(
+            "/graph/search/ws/proj" -> s"search_term=e&limit=$limit",
+            s"/graph/neighbors/ws/proj/DefinitionNode/$id" -> s"limit=$limit",
+            "/graph/initial/ws/proj" -> (s"directory_limit=$limit&file_limit=$limit" +
+              s"&definition_limit=$limit&imported_symbol_limit=$limit"))) {
+          val want = spark0.route(path, q)
+          assert(want._1 == 200, s"$path?$q: $want")
+          assert(index.route(path, q) == want, s"$path?$q")
+        }
+      }
+      val none = spark0.route("/graph/search/ws/proj", "search_term=e&limit=-5")._2
+      assert((JsonMethods.parse(none) \ "nodes") == JArray(Nil))
+    } finally { spark0.stop(); index.stop() }
+  }
+
+  test("metrics: serving-index builds, answers per plan and index rows") {
+    val (spark0, index) = (servedAt(storeDir, 0L),
+      servedAt(storeDir, graft.serve.ServedStore.IndexBoundBytes))
+    def series(s: GraphHttpServer): Map[String, Double] =
+      s.route("/metrics", "")._2.linesIterator.filter(l =>
+        l.startsWith("graft_serv")).map { l =>
+        val i = l.lastIndexOf(' ')
+        l.substring(0, i) -> l.substring(i + 1).toDouble
+      }.toMap
+    val builds = "graft_serving_index_builds_total"
+    val rows = "graft_serving_index_rows"
+    val byIndex = "graft_serve_answers_total{path=\"index\"}"
+    val bySpark = "graft_serve_answers_total{path=\"spark\"}"
+    try {
+      val before = Seq(spark0, index).map(series)
+      before.foreach(b => assert(b(builds) == 0 && b(rows) == 0 &&
+        b(byIndex) == 0 && b(bySpark) == 0, b))
+      for (s <- Seq(spark0, index); (p, q) <- Seq(
+          "/graph/initial/ws/proj" -> "", "/graph/search/ws/proj" -> "search_term=help",
+          "/graph/neighbors/ws/proj/FileNode/0" -> "", "/graph/stats/ws/proj" -> ""))
+        assert(s.route(p, q)._1 == 200, p)
+      val (a0, a1) = (series(spark0), series(index))
+      assert(a0(bySpark) == 4 && a0(byIndex) == 0 && a0(builds) == 0 && a0(rows) == 0, a0)
+      assert(a1(byIndex) == 4 && a1(bySpark) == 0 && a1(builds) == 1 && a1(rows) > 0, a1)
+      val doc = index.route("/metrics", "")._2
+      Seq(builds -> "counter", "graft_serve_answers_total" -> "counter",
+        rows -> "gauge").foreach { case (f, t) =>
+        assert(doc.contains(s"# TYPE $f $t"), doc)
+      }
+    } finally { spark0.stop(); index.stop() }
+  }
+
   override def afterAll(): Unit = {
     server.stop()
     super.afterAll()
