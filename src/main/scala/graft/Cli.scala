@@ -53,8 +53,7 @@ object Cli {
       val repo = rest.headOption.getOrElse(
         new java.io.File(repoDir).getName)
       val t0 = System.nanoTime()
-      val store = Indexer.indexDirectory(spark, repoDir, repo)
-      store.write(storeDir)
+      Indexer.indexTo(spark, repoDir, repo, storeDir)
       val wrote = System.nanoTime()
       val readBack = GraphStore.read(spark, storeDir).cacheAll()
       // optional 2nd rest arg: stats JSON path (the reference's --stats)
@@ -104,8 +103,7 @@ object Cli {
         .getOrElse(Array.empty).filter(_.isDirectory).sortBy(_.getName)
       require(repos.nonEmpty, s"no project directories under $wsDir")
       repos.foreach { r =>
-        Indexer.indexDirectory(spark, r.getPath, r.getName)
-          .write(s"$storeDir/${r.getName}")
+        Indexer.indexTo(spark, r.getPath, r.getName, s"$storeDir/${r.getName}")
         println(s"indexed ${r.getName} -> $storeDir/${r.getName}")
       }
 

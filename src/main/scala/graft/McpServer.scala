@@ -171,10 +171,10 @@ final class McpServer private[graft] (spark: SparkSession,
       case "index_project" =>
         val repoDir = confined(str("repo_dir").getOrElse(sys.error("repo_dir required")))
         val out = confined(str("store_dir").getOrElse(sys.error("store_dir required")))
-        val store = graft.analyze.Indexer.indexDirectory(spark, repoDir,
-          new java.io.File(repoDir).getName)
-        store.write(out)
-        ServedQueries.jsonRows(new QueryLibrary(store).graphStats())
+        graft.analyze.Indexer.indexTo(spark, repoDir,
+          new java.io.File(repoDir).getName, out)
+        ServedQueries.jsonRows(
+          new QueryLibrary(graft.store.GraphStore.read(spark, out)).graphStats())
       case "list_projects" =>
         val ws = confined(str("workspace_dir").getOrElse(sys.error("workspace_dir required")))
         import spark.implicits._

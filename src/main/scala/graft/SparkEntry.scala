@@ -39,6 +39,19 @@ object SparkEntry {
     }))
   def registerTmpCleanup(dir: String): Unit = { tmpHook; tmpDirs.put(dir, ()) }
 
+  /** A gate's scratch directory, `<java.io.tmpdir>/graft_<prefix>_<pid>_<h>`
+    * with `h` the first 8 bytes of SHA-256(`key`) in hex, removed at JVM
+    * exit: one per process and input, so concurrent runs never share one.
+    */
+  def gateDir(prefix: String, key: String): String = {
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_${prefix}_" +
+      s"${ProcessHandle.current().pid()}_$digest"
+    registerTmpCleanup(dir)
+    dir
+  }
+
   private val stores = scala.collection.concurrent.TrieMap[String, GraphStore]()
 
   /** Session cache for the unigram tokenizer family's shared EM training
@@ -1078,11 +1091,7 @@ object SparkEntry {
         true AS est_ok, true AS inc_ok
       FROM events GROUP BY 1 ORDER BY event_type""") { (s, d) =>
       val ev = readEvents(s, d).select("event_type", "user_id")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sketch_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("sketch", d)
       val full = graft.store.SketchStore.build(s, s"$base/full", ev,
         "event_type", "user_id")
       val inc = graft.store.SketchStore.build(s, s"$base/inc",
@@ -1624,11 +1633,7 @@ object SparkEntry {
       import s.implicits._
       val e = storeFor(s, d).edges.where(col("kind") === "DEF_TO_DEF")
       val spl = (col("source_id") + col("target_id")) % 4
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_tristore_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("tristore", d)
       val st = graft.store.TriangleStore.build(s, base, e.where(spl =!= 0))
       val (nNew, delta) = st.admit(e.where(spl === 0))
       val (_, total) = st.stats
@@ -1671,11 +1676,7 @@ object SparkEntry {
       import s.implicits._
       val e = storeFor(s, d).edges.where(col("kind") === "DEF_TO_DEF")
       val spl = (col("source_id") + col("target_id")) % 4
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_triret_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("triret", d)
       val st = graft.store.TriangleStore.build(s, base, e)
       val (nGone, removed) = st.retire(e.where(spl === 0))
       val (_, total) = st.stats
@@ -2010,11 +2011,7 @@ object SparkEntry {
       // collision-free per-process path + exit cleanup, the same fix the
       // ann_ivf_indexed gate got (abs(hashCode) was sign-broken and
       // collidable; concurrent runs raced Overwrite-vs-read)
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_dedup_index_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(idxDir)
+      val idxDir = SparkEntry.gateDir("dedup_index", d)
       val idx = graft.store.DedupIndexStore.build(s, idxDir,
         docs.where(col("doc_id") % 5 === 0), "doc_id", "text")
       Dedup.crossCorpusPairsIndexed(
@@ -2339,11 +2336,7 @@ object SparkEntry {
       // shutdown hook reclaims the directory when the JVM exits (the gate's
       // returned DataFrame reads the store lazily, so an in-gate delete
       // would break evaluation)
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ann_index_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(idxDir)
+      val idxDir = SparkEntry.gateDir("ann_index", d)
       val idx = graft.store.AnnIndexStore.build(s, idxDir, embs,
         "vec_id", "embedding", nlist = 16, lloydIters = 2,
         pretrainedIvf = ivf16For(s, d))
@@ -2373,11 +2366,7 @@ object SparkEntry {
       SELECT qid AS query_id, nid AS neighbor_id, round(cos, 4) AS cosine, rank
       FROM ar_ranked WHERE rank <= 5 ORDER BY query_id, rank""") { (s, d) =>
       val embs = s.read.parquet(s"$d/embeddings.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_annret_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(idxDir)
+      val idxDir = SparkEntry.gateDir("annret", d)
       val idx = graft.store.AnnIndexStore.build(s, idxDir, embs,
         "vec_id", "embedding", nlist = 16, lloydIters = 2,
         pretrainedIvf = ivf16For(s, d))
@@ -2410,11 +2399,7 @@ object SparkEntry {
       SELECT qid AS query_id, nid AS neighbor_id, round(cos, 4) AS cosine, rank
       FROM af_ranked WHERE rank <= 5 ORDER BY query_id, rank""") { (s, d) =>
       val embs = s.read.parquet(s"$d/embeddings.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_annflt_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(idxDir)
+      val idxDir = SparkEntry.gateDir("annflt", d)
       val idx = graft.store.AnnIndexStore.build(s, idxDir, embs,
         "vec_id", "embedding", nlist = 16, lloydIters = 2,
         metaCols = Seq("label"), pretrainedIvf = ivf16For(s, d))
@@ -2442,11 +2427,7 @@ object SparkEntry {
       SELECT qid AS query_id, nid AS neighbor_id, round(cos, 4) AS cosine, rank
       FROM as_ranked WHERE rank <= 5 ORDER BY query_id, rank""") { (s, d) =>
       val embs = s.read.parquet(s"$d/embeddings.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_annstr_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(idxDir)
+      val idxDir = SparkEntry.gateDir("annstr", d)
       val idx = graft.store.AnnIndexStore.build(s, idxDir,
         embs.where(col("vec_id") % 3 === 0), "vec_id", "embedding",
         nlist = 16, lloydIters = 2,
@@ -2706,11 +2687,7 @@ object SparkEntry {
       val docs = s.read.parquet(s"$d/documents.parquet")
       val items = docs.select(col("doc_id"), explode(
         graft.functions.TextFunctions.shingleList(col("text"), 2)).as("item"))
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_kmv_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("kmv", d)
       val st = graft.store.KmvStore.build(s, s"$base/kmv",
         items.where(col("doc_id") % 4 === 0), "item", k = 256)
       st.admit(items.where(col("doc_id") % 4 === 1))
@@ -2802,11 +2779,7 @@ object SparkEntry {
         .where(col("value").isNotNull)
         .select(col("event_type").cast("string").as("key"), col("value"),
           col("user_id"))
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_hist_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("hist", d)
       val st = graft.store.HistStore.build(s, s"$base/hs",
         ev.where(col("user_id") % 2 === 0), "key", "value")
       st.append(ev.where(col("user_id") % 2 =!= 0), "odd")
@@ -2864,11 +2837,7 @@ object SparkEntry {
     q("sk_bloom_store", bloomOracleSql) { (s, d) =>
       val ids = s.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id"), col("doc_id").cast("string").as("s"))
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bloom_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("bloom", d)
       val st = graft.store.BloomStore.build(s, s"$base/bf",
         ids.where(col("doc_id") % 4 === 0), "s", k = 3, width = 4096)
       st.admit(ids.where(col("doc_id") % 4 === 2))
@@ -2888,11 +2857,7 @@ object SparkEntry {
       val docs = s.read.parquet(s"$d/documents.parquet")
       val items = docs.select(col("doc_id"), explode(
         graft.functions.TextFunctions.shingleList(col("text"), 3)).as("item"))
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_cm_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("cm", d)
       val st = graft.store.CmStore.build(s, s"$base/cm",
         items.where(col("doc_id") % 2 === 0), "item", depth = 4, width = 2048)
       st.append(items.where(col("doc_id") % 2 =!= 0), "odd")
@@ -3115,11 +3080,7 @@ object SparkEntry {
       val docs = s.read.parquet(s"$d/documents.parquet")
       val keepers = Dedup.exact(docs, "doc_id", "text")
         .select(col("kept_doc_id").as("doc_id"))
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_corpus_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(dir)
+      val dir = SparkEntry.gateDir("corpus", d)
       graft.store.CorpusStore.write(s, dir, docs.join(keepers, "doc_id"),
         "doc_id", "text", nShards = 8)
       val intact =
@@ -3145,11 +3106,7 @@ object SparkEntry {
         true AS intact
       FROM cr_sh GROUP BY shard ORDER BY shard""") { (s, d) =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_corpret_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(dir)
+      val dir = SparkEntry.gateDir("corpret", d)
       graft.store.CorpusStore.write(s, dir, docs, "doc_id", "text",
         nShards = 8)
       graft.store.CorpusStore.retire(s, dir,
@@ -3322,11 +3279,7 @@ object SparkEntry {
           row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM sc)
       WHERE rank <= 20 ORDER BY rank""") { (s, d) =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bm25idx_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("bm25idx", d)
       val st = graft.store.SearchIndexStore.build(s, base,
         docs.where(col("doc_id") % 2 === 0), "doc_id", "text")
       st.append(docs.where(col("doc_id") % 2 =!= 0), "doc_id", "text")
@@ -3360,11 +3313,7 @@ object SparkEntry {
           row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM sc)
       WHERE rank <= 20 ORDER BY rank""") { (s, d) =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bm25ret_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(base)
+      val base = SparkEntry.gateDir("bm25ret", d)
       val st = graft.store.SearchIndexStore.build(s, base,
         docs.where(col("doc_id") % 3 =!= 2), "doc_id", "text")
       st.append(docs.where(col("doc_id") % 3 === 2), "doc_id", "text")
@@ -3695,11 +3644,7 @@ object SparkEntry {
     //      encode job opens.)
     q("tok_vocab_store", wpEncodeOracle) { (s, d) =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_tokstore_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(dir)
+      val dir = SparkEntry.gateDir("tokstore", d)
       graft.store.TokenizerStore.save(s, dir,
         graft.pipeline.WordPiece.wordpieceMerges(docs, "text",
           rounds = wpRounds, minPairs = wpMinPairs),
@@ -3873,11 +3818,7 @@ object SparkEntry {
     //      (the tok_vocab_store discipline for the third tokenizer kind)
     q("tok_unigram_store", uniEncodeOracle) { (s, d) =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_unistore_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(dir)
+      val dir = SparkEntry.gateDir("unistore", d)
       graft.store.TokenizerStore.saveUnigram(s, dir,
         SparkEntry.unigramVocabFor(s, d, "all",
           graft.pipeline.Unigram.train(docs, "text",
@@ -3918,12 +3859,7 @@ object SparkEntry {
       val docs = s.read.parquet(s"$d/documents.parquet")
         .withColumn("text", concat(col("text"), lit(" q"),
           col("doc_id").cast("string"), lit("z")))
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest((d + "#oov").getBytes("UTF-8")).take(8)
-        .map("%02x".format(_)).mkString
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_unioov_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(dir)
+      val dir = SparkEntry.gateDir("unioov", d + "#oov")
       graft.store.TokenizerStore.saveUnigram(s, dir,
         SparkEntry.unigramVocabFor(s, d, "oov",
           graft.pipeline.Unigram.train(docs.where(col("doc_id") % 10 < 3),
@@ -4457,12 +4393,7 @@ object SparkEntry {
       FROM zsh8 s JOIN znp np USING (shard)
       GROUP BY s.shard ORDER BY s.shard""") { (s, d) =>
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_e2e_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(s"$base/idx")
-      SparkEntry.registerTmpCleanup(s"$base/pub")
+      val base = SparkEntry.gateDir("e2e", d)
       val idx = graft.store.DedupIndexStore.build(s, s"$base/idx",
         docs.where(col("doc_id") % 5 === 0), "doc_id", "text")
       graft.pipeline.CurationPipeline.run(s,
@@ -4604,12 +4535,7 @@ object SparkEntry {
       FROM wsh8 GROUP BY shard ORDER BY shard""") { (s, d) =>
       import s.implicits._
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_cstr_" +
-        s"${ProcessHandle.current().pid()}_$digest"
-      SparkEntry.registerTmpCleanup(s"$base/idx")
-      SparkEntry.registerTmpCleanup(s"$base/pub")
+      val base = SparkEntry.gateDir("cstr", d)
       val idx = graft.store.DedupIndexStore.build(s, s"$base/idx",
         docs.where(col("doc_id") % 5 === 0), "doc_id", "text")
       graft.store.CorpusStore.write(s, s"$base/pub",

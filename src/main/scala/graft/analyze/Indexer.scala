@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.extract.{Extracted, Extractors, SourceFile}
 import graft.model.{EdgeKind, RelType}
+import graft.operators.BatchScope
 import graft.store.GraphStore
 
 /** The indexing dataflow (SURVEY §3.1 stages 3-5 as one job DAG):
@@ -36,15 +37,15 @@ object Indexer {
   def extractTables(spark: SparkSession, files: Dataset[SourceFile])
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val extracted = files.mapPartitions { it =>
+    // parse once; everything below reuses it
+    val extracted = BatchScope.localCheckpoint(files.mapPartitions { it =>
       it.map { f =>
         val e: Extracted = Extractors.extract(f)
         (FileMeta(f.path, f.absolutePath, f.repositoryName, f.name,
           f.extension, f.language), e.definitions, e.imports, e.references,
           e.typeFacts)
       }
-    }.toDF("file", "definitions", "imports", "references", "typeFacts")
-      .localCheckpoint(true) // parse once; everything below reuses it
+    }.toDF("file", "definitions", "imports", "references", "typeFacts"))
 
     (extracted.select($"file.*"),
       extracted.select(explode($"definitions").as("d")).select($"d.*"),
@@ -80,15 +81,17 @@ object Indexer {
 
     // ---- A2: directory hierarchy --------------------------------------
     val dirPaths = Analyzer.deriveDirectories(fileMeta)
-    val dirNodes = Analyzer.assignIds(dirPaths.select("path", "parent_path", "name"),
-      Seq("path")).localCheckpoint(true) // reused by several edge branches
+    val dirNodes = BatchScope.localCheckpoint(Analyzer.assignIds(
+      dirPaths.select("path", "parent_path", "name"),
+      Seq("path"))) // reused by several edge branches
     val repoName = lit(fileMeta.select("repositoryName").head(1)
       .headOption.map(_.getString(0)).getOrElse("repo"))
     val directories = dirNodes.select(col("id"), col("path"),
       col("path").as("absolute_path"), repoName.as("repository_name"), col("name"))
 
     // ---- file nodes ----------------------------------------------------
-    val fileNodes = Analyzer.assignIds(fileMeta, Seq("path")).localCheckpoint(true)
+    val fileNodes = BatchScope.localCheckpoint(
+      Analyzer.assignIds(fileMeta, Seq("path")))
     val filesDf = fileNodes.select(col("id"), col("path"),
       col("absolutePath").as("absolute_path"), col("language"),
       col("repositoryName").as("repository_name"),
@@ -96,8 +99,8 @@ object Indexer {
 
     // ---- A3: definition dedup by (fqn, file) + total_locations ---------
     val dedupedDefs = Analyzer.dedupDefinitions(rawDefs)
-    val defNodes = Analyzer.assignIds(dedupedDefs,
-      Seq("primary_file_path", "primary_start_byte", "fqn")).localCheckpoint(true)
+    val defNodes = BatchScope.localCheckpoint(Analyzer.assignIds(dedupedDefs,
+      Seq("primary_file_path", "primary_start_byte", "fqn")))
     val definitions = defNodes.select(col("id"), col("fqn"), col("name"),
       col("definition_type"), col("primary_file_path"),
       col("primary_start_byte"), col("primary_end_byte"),
@@ -105,9 +108,9 @@ object Indexer {
       col("total_locations"))
 
     // ---- A4: imported symbols ------------------------------------------
-    val impNodes = Analyzer.assignIds(
+    val impNodes = BatchScope.localCheckpoint(Analyzer.assignIds(
       rawImps.dropDuplicates("filePath", "startByte", "name"),
-      Seq("filePath", "startByte", "name")).localCheckpoint(true)
+      Seq("filePath", "startByte", "name")))
     val importedSymbols = impNodes.select(col("id"),
       col("importType").as("import_type"), col("importPath").as("import_path"),
       col("name"), col("alias"), col("filePath").as("file_path"),
@@ -237,4 +240,12 @@ object Indexer {
   /** Convenience: scan a local directory and index it. */
   def indexDirectory(spark: SparkSession, dir: String, repo: String): GraphStore =
     index(spark, graft.extract.FileScanner.scan(spark, dir, repo))
+
+  /** Index a local directory into the store at `storeDir` as one batch: the
+    * checkpoints the index makes are freed once the write returns or throws.
+    */
+  def indexTo(spark: SparkSession, dir: String, repo: String,
+              storeDir: String): Unit =
+    scala.util.Using.resource(BatchScope())(_ =>
+      indexDirectory(spark, dir, repo).write(storeDir))
 }

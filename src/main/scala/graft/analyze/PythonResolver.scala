@@ -3,6 +3,7 @@ package graft.analyze
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.{EdgeKind, RelType}
+import graft.operators.BatchScope
 
 /** A6 — interfile import resolution (reference:
   * analysis/languages/python/interfile.rs:8-170, analyzer.rs:643-898).
@@ -198,7 +199,8 @@ object PythonResolver {
   /** Transitive resolution of re-export chains: follow IMP→IMP edges to a
     * terminal IMP→DEF / IMP→FILE, bounded by `maxDepth` (cycle guard —
     * reference: interfile.rs recursion with cycle set). Iterative join with
-    * localCheckpoint per hop. Returns (source_id, target_kind, target_id).
+    * a [[BatchScope.localCheckpoint]] per hop, freed with the enclosing
+    * batch. Returns (source_id, target_kind, target_id).
     */
   def resolveReExportChains(importEdges: DataFrame, maxDepth: Int = 10): DataFrame = {
     val impImp = importEdges.where(col("kind") === EdgeKind.ImpToImp)
@@ -208,26 +210,24 @@ object PythonResolver {
         when(col("kind") === EdgeKind.ImpToDef, "definition")
           .otherwise("file").as("target_kind"),
         col("target_id"))
-    var frontier = impImp.localCheckpoint(true)
-    var resolved = frontier
+    var frontier = BatchScope.localCheckpoint(impImp)
+    var resolved = BatchScope.localCheckpoint(frontier
       .join(terminal, col("via") === col("t_src"))
-      .select(col("src").as("source_id"), col("target_kind"), col("target_id"))
-      .localCheckpoint(true)
+      .select(col("src").as("source_id"), col("target_kind"), col("target_id")))
     var depth = 1
     var continue = frontier.limit(1).count() > 0
     while (continue && depth < maxDepth) {
       depth += 1
-      val next = frontier
+      val next = BatchScope.localCheckpoint(frontier
         .join(impImp.select(col("src").as("n_src"), col("via").as("n_via")),
           col("via") === col("n_src"))
-        .select(col("src"), col("n_via").as("via"))
-        .localCheckpoint(true)
+        .select(col("src"), col("n_via").as("via")))
       continue = next.limit(1).count() > 0
       if (continue) {
-        resolved = resolved.unionByName(
+        resolved = BatchScope.localCheckpoint(resolved.unionByName(
           next.join(terminal, col("via") === col("t_src"))
             .select(col("src").as("source_id"), col("target_kind"), col("target_id")))
-          .distinct().localCheckpoint(true)
+          .distinct())
         frontier = next
       }
     }

@@ -406,22 +406,6 @@ object TypedResolver {
       found
     }
 
-    def lub(cands: Seq[String]): Seq[String] = {
-      val resolvedTypes = cands.flatMap(c =>
-        cat.resolveTypePath(file, callerFqn, c).headOption).distinct
-      if (resolvedTypes.size <= 1) resolvedTypes
-      else {
-        val closures = resolvedTypes.map(cat.superClosure)
-        val common = closures.reduce(_ intersect _)
-        if (common.nonEmpty)
-          // most-derived common supertypes
-          common.filter(c => !common.exists(d =>
-            d != c && cat.superClosure(d).contains(c) &&
-              !cat.superClosure(c).contains(d))).toSeq.sorted
-        else resolvedTypes
-      }
-    }
-
     def typeExprToTypes(expr: String, inFile: String, inScope: String): Seq[String] = {
       val cands = expr.split("\\|").toSeq.filter(_.nonEmpty)
       val resolvedAll = cands.flatMap(c =>
@@ -525,7 +509,7 @@ object TypedResolver {
               .flatMap { case (rf, t) => typeExprToTypes(t, rf, fq) }
           }
         }.distinct
-        if (retTypes.isEmpty) Nil else memberOnTypes(lubIdentity(retTypes), name)
+        if (retTypes.isEmpty) Nil else memberOnTypes(retTypes, name)
       case r if r.startsWith("BINOP:") =>
         val v = r.stripPrefix("BINOP:")
         val recvTypes = varType(v).toSeq.flatMap(typeExprToTypes(_, file, callerFqn))
@@ -600,8 +584,6 @@ object TypedResolver {
         memberOnTypes(cur, name)
     }
   }
-
-  private def lubIdentity(ts: Seq[String]): Seq[String] = ts
 }
 
 /** Resolution output row (top-level: Dataset encoders codegen cleanly for

@@ -19,49 +19,48 @@ object FileScanner {
   private val ignoredDirs = Set(".git", ".hg", ".svn", "node_modules",
     "__pycache__", "target", ".idea")
 
+  /** Every candidate file under `rootDir` ([[listPaths]]'s walk: nested
+    * .gitignore semantics, ignored directories, no symlinks followed), read
+    * in walk order.
+    */
   def scan(spark: SparkSession, rootDir: String,
            repositoryName: String): Dataset[SourceFile] = {
-    import spark.implicits._
     val root = Paths.get(rootDir).toAbsolutePath.normalize
-    val files = walkDir(root, root, Vector.empty, repositoryName).toSeq
-    // distribute: extraction parallelism is per-file
-    spark.createDataset(files).repartition(spark.sparkContext.defaultParallelism)
+    distribute(spark, walkLight(root, root, Vector.empty, null).flatMap {
+      case (rel, _, _) => readOne(root, root.resolve(rel), repositoryName)
+    }.toSeq)
   }
 
-  /** Recursive walk honoring nested .gitignore files ([[GitIgnore]]
-    * semantics: per-directory scope, negation, anchoring, last-match-wins).
-    * Ignored directories are not descended into — which is also how git's
-    * "cannot re-include inside an excluded directory" rule falls out.
-    *
-    * Directory symlinks are not followed (NOFOLLOW type checks): a link
-    * pointing at an ancestor would otherwise recurse unboundedly, and git
-    * itself treats symlinks as entries, not trees. Each directory's listing
-    * is materialized and the stream closed before recursing, so the walk
-    * holds one open descriptor at a time instead of one per tree level.
+  /** The rows of [[scan]] whose path is in `paths`, reading only those
+    * files. A path is read only when the full walk would yield it: it is the
+    * normalized path of an entry under the root, no ancestor directory is
+    * ignored or a symlink, and the entry is a regular file (links not
+    * followed) within [[MaxFileBytes]] and not binary. Paths come from a
+    * change feed on disk, so a `..` path or a path through a symlinked
+    * directory is never read.
     */
-  private def walkDir(root: Path, dir: Path,
-                      inherited: Vector[(String, Seq[GitIgnore.Rule])],
-                      repo: String): Iterator[SourceFile] = {
-    val gi = dir.resolve(".gitignore")
-    val scopes =
-      if (Files.isRegularFile(gi))
-        inherited :+ (relOf(root, dir) ->
-          GitIgnore.parse(Files.readAllLines(gi).asScala.toSeq))
-      else inherited
-    val entries = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toVector finally s.close()
-    }
+  def scanPaths(spark: SparkSession, rootDir: String, repositoryName: String,
+                paths: Iterable[String]): Dataset[SourceFile] = {
+    val root = Paths.get(rootDir).toAbsolutePath.normalize
+    val ignore = new IgnoreChecker(rootDir)
     val nofollow = java.nio.file.LinkOption.NOFOLLOW_LINKS
-    entries.iterator.flatMap { p =>
-      val name = p.getFileName.toString
-      val isDir = Files.isDirectory(p, nofollow)
-      if (isDir && ignoredDirs(name)) Iterator.empty
-      else if (GitIgnore.ignored(relOf(root, p), isDir, scopes)) Iterator.empty
-      else if (isDir) walkDir(root, p, scopes, repo)
-      else if (Files.isRegularFile(p, nofollow)) readOne(root, p, repo).iterator
-      else Iterator.empty
-    }
+    def walked(rel: String): Option[Path] =
+      scala.util.Try(root.resolve(rel).normalize).toOption.filter { p =>
+        p.startsWith(root) && p != root && relOf(root, p) == rel &&
+          Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != root)
+            .forall(Files.isDirectory(_, nofollow)) &&
+          !ignore.isIgnored(p, isDir = false) &&
+          Files.isRegularFile(p, nofollow)
+      }
+    distribute(spark, paths.toSeq.distinct.sorted.flatMap(rel =>
+      walked(rel).flatMap(readOne(root, _, repositoryName))))
+  }
+
+  // distribute: extraction parallelism is per-file
+  private def distribute(spark: SparkSession,
+                         files: Seq[SourceFile]): Dataset[SourceFile] = {
+    import spark.implicits._
+    spark.createDataset(files).repartition(spark.sparkContext.defaultParallelism)
   }
 
   private def relOf(root: Path, p: Path): String =
@@ -181,10 +180,19 @@ object FileScanner {
       scopes(dir.toAbsolutePath.normalize)
   }
 
-  /** Shared walker behind [[listPaths]]/[[listPathsUnder]]/[[listDirs]]/
-    * [[listPathsRegistering]]: yields (rel, size, mtime) file tuples; when
-    * `onDir` is non-null it is invoked for every candidate directory in
-    * pre-order, before that directory's contents are listed.
+  /** The one walker, behind [[scan]]/[[listPaths]]/[[listPathsUnder]]/
+    * [[listDirs]]/[[listPathsRegistering]]. It honors nested .gitignore
+    * files ([[GitIgnore]] semantics: per-directory scope, negation,
+    * anchoring, last-match-wins) and does not descend into ignored
+    * directories, which is also how git's "cannot re-include inside an
+    * excluded directory" rule falls out. Directory symlinks are not
+    * followed (NOFOLLOW type checks): a link to an ancestor would recurse
+    * unboundedly, and git treats symlinks as entries, not trees. Each
+    * directory's listing is materialized and its stream closed before
+    * recursing, so the walk holds one open descriptor at a time. Yields
+    * (rel, size, mtime) file tuples; when `onDir` is non-null it is
+    * invoked for every candidate directory in pre-order, before that
+    * directory's contents are listed.
     */
   private def walkLight(root: Path, dir: Path,
       inherited: Vector[(String, Seq[GitIgnore.Rule])],

@@ -68,9 +68,6 @@ object TextFunctions {
       case None => shingles(tokens(text), n)
     }
 
-  /** Per-element polynomial hash of a string array. */
-  def hashAll(arr: Column): Column = transform(arr, s => charFold(s))
-
   // --- MinHash family ------------------------------------------------------
   /** Deterministic hash-family coefficients (fixed LCG-style constants, no
     * runtime randomness): h_i(x) = (a_i * x + b_i) % HashMod with x < HashMod

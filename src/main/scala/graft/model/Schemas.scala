@@ -107,6 +107,11 @@ object EdgeKind {
     ImpToImp -> ("imported_symbol", "imported_symbol"),
     ImpToDef -> ("imported_symbol", "definition"),
     ImpToFile -> ("imported_symbol", "file"))
+
+  /** The kinds whose source (target) endpoint is node table `node`, in
+    * [[all]] order. */
+  def withSource(node: String): Seq[String] = all.filter(endpoints(_)._1 == node)
+  def withTarget(node: String): Seq[String] = all.filter(endpoints(_)._2 == node)
 }
 
 /** Node-table tags, used to build GraphX vertex ids:

@@ -435,9 +435,8 @@ final class QueryLibrary(store: GraphStore) {
   def detachDeleteDefinitions(column: String, values: Seq[Any]): GraphStore = {
     val doomed = defs.where(col(column).isin(values: _*)).select(col("id").as("xid"))
     val keptDefs = defs.join(broadcast(doomed), col("id") === col("xid"), "left_anti")
-    val srcIsDef = col("kind").isin(EdgeKind.DefToDef, EdgeKind.DefToImp)
-    val dstIsDef = col("kind").isin(EdgeKind.FileToDef, EdgeKind.DefToDef,
-      EdgeKind.ImpToDef)
+    val srcIsDef = col("kind").isin(EdgeKind.withSource("definition"): _*)
+    val dstIsDef = col("kind").isin(EdgeKind.withTarget("definition"): _*)
     val keptEdges = edges
       .join(broadcast(doomed.withColumnRenamed("xid", "sdel")),
         srcIsDef && col("source_id") === col("sdel"), "left_anti")
@@ -558,21 +557,12 @@ final class QueryLibrary(store: GraphStore) {
 
 object QueryLibrary {
   /** kind → endpoint node-table, as a Catalyst CASE expression (from=true
-    * gives the source side, from=false the target side). Mirrors the 9
-    * allowed (from,to) pairs (database/src/schema/init.rs:96-137).
+    * gives the source side, from=false the target side), built from
+    * [[EdgeKind.endpoints]].
     */
   def kindFromSide(kind: Column, from: Boolean): Column = {
-    val m: Seq[(String, (String, String))] = Seq(
-      EdgeKind.DirToDir -> ("directory", "directory"),
-      EdgeKind.DirToFile -> ("directory", "file"),
-      EdgeKind.FileToDef -> ("file", "definition"),
-      EdgeKind.FileToImp -> ("file", "imported_symbol"),
-      EdgeKind.DefToDef -> ("definition", "definition"),
-      EdgeKind.DefToImp -> ("definition", "imported_symbol"),
-      EdgeKind.ImpToImp -> ("imported_symbol", "imported_symbol"),
-      EdgeKind.ImpToDef -> ("imported_symbol", "definition"),
-      EdgeKind.ImpToFile -> ("imported_symbol", "file"))
-    m.foldLeft(lit(null).cast("string")) { case (acc, (k, (f, t))) =>
+    EdgeKind.all.foldLeft(lit(null).cast("string")) { (acc, k) =>
+      val (f, t) = EdgeKind.endpoints(k)
       when(kind === k, lit(if (from) f else t)).otherwise(acc)
     }
   }

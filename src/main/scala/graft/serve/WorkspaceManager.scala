@@ -4,7 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import scala.util.Using
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.BatchScope
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -160,10 +162,9 @@ final class WorkspaceManager(spark: SparkSession, val dataDir: String,
         try {
           ws.projects.foreach { p =>
             if (live) {
-              val store = graft.analyze.Indexer.indexDirectory(
-                spark, p.projectPath,
-                Paths.get(p.projectPath).getFileName.toString)
-              store.write(storeDirFor(ws, p))
+              graft.analyze.Indexer.indexTo(spark, p.projectPath,
+                Paths.get(p.projectPath).getFileName.toString,
+                storeDirFor(ws, p))
               if (live) {
                 p.status = "Indexed"
                 p.lastIndexedAt = Some(Instant.now.toString)
@@ -223,41 +224,49 @@ final class WorkspaceManager(spark: SparkSession, val dataDir: String,
         val watcher = new graft.stream.FileWatcher(
           p.projectPath, feedDir.toString, pollMs)
         watcher.start()
-        val repoName = Paths.get(p.projectPath).getFileName.toString
         val query = graft.stream.IncrementalIndexer.start(
-          spark, feedDir.toString, pollMs) { (batch, _) =>
-          val rows = batch.select("changed_path", "change_type").collect()
-          if (rows.nonEmpty) {
-            val surviving = rows.collect {
-              case r if r.getString(1) != "deleted" => r.getString(0)
-            }.toSet
-            val store = graft.store.GraphStore.read(spark, storeDir)
-            val freshFiles = graft.extract.FileScanner
-              .scan(spark, p.projectPath, repoName)
-              .filter(f => surviving.contains(f.path))
-            val merged = graft.stream.IncrementalIndexer
-              .applyReindexBatch(spark, store, batch, freshFiles)
-            // cut lineage back to the store being overwritten before the
-            // overwrite (localCheckpoint materializes each table)
-            val pinned = merged.copy(
-              directories = merged.directories.localCheckpoint(true),
-              files = merged.files.localCheckpoint(true),
-              definitions = merged.definitions.localCheckpoint(true),
-              importedSymbols = merged.importedSymbols.localCheckpoint(true),
-              edges = merged.edges.localCheckpoint(true))
-            pinned.write(storeDir)
-            p.lastIndexedAt = Some(Instant.now.toString)
-            bus.publish("WorkspaceReindexed",
-              "workspace_folder_path" -> JString(ws.path),
-              "project_path" -> JString(p.projectPath),
-              "changed" -> JArray(rows.map(r =>
-                JString(r.getString(0))).toList))
-          }
-        }
+          spark, feedDir.toString, pollMs)((batch, _) => reindexBatch(ws, p, batch))
         (watcher, query)
       })
       ()
     }
+
+  /** One change batch of a project's watch loop: read the surviving
+    * changed paths, merge them into the store's graph, rewrite the store
+    * and publish `WorkspaceReindexed`. It runs as one [[BatchScope]], so
+    * every checkpoint it makes is freed once the write returns or throws.
+    */
+  private[graft] def reindexBatch(ws: WorkspaceState, p: ProjectState,
+      batch: DataFrame): Unit = {
+    val rows = batch.select("changed_path", "change_type").collect()
+    if (rows.nonEmpty) {
+      val storeDir = storeDirFor(ws, p)
+      Using.resource(BatchScope()) { scope =>
+        val surviving = rows.collect {
+          case r if r.getString(1) != "deleted" => r.getString(0)
+        }
+        val freshFiles = graft.extract.FileScanner.scanPaths(spark,
+          p.projectPath, Paths.get(p.projectPath).getFileName.toString,
+          surviving)
+        val merged = graft.stream.IncrementalIndexer.applyReindexBatch(spark,
+          graft.store.GraphStore.read(spark, storeDir), batch, freshFiles)
+        // cut lineage back to the store being overwritten before the
+        // overwrite (each checkpoint materializes its table)
+        merged.copy(
+          directories = scope.checkpoint(merged.directories),
+          files = scope.checkpoint(merged.files),
+          definitions = scope.checkpoint(merged.definitions),
+          importedSymbols = scope.checkpoint(merged.importedSymbols),
+          edges = scope.checkpoint(merged.edges)).write(storeDir)
+      }
+      p.lastIndexedAt = Some(Instant.now.toString)
+      bus.publish("WorkspaceReindexed",
+        "workspace_folder_path" -> JString(ws.path),
+        "project_path" -> JString(p.projectPath),
+        "changed" -> JArray(rows.map(r =>
+          JString(r.getString(0))).toList))
+    }
+  }
 
   /** Stop watchers/queries for one workspace (delete calls this). */
   private def unwatch(ws: WorkspaceState): Unit =

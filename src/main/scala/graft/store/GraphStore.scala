@@ -47,15 +47,10 @@ final case class GraphStore(
 
   // ---- typed Dataset[T] face (model.Nodes; `as[T]` is metadata-only) ----
   import org.apache.spark.sql.{Dataset, Encoders}
-  import graft.model.{DirectoryNode, FileNode, DefinitionNode,
-    ImportedSymbolNode, EdgeRow}
-  def typedDirectories: Dataset[DirectoryNode] =
-    directories.as(Encoders.product[DirectoryNode])
+  import graft.model.{FileNode, DefinitionNode, EdgeRow}
   def typedFiles: Dataset[FileNode] = files.as(Encoders.product[FileNode])
   def typedDefinitions: Dataset[DefinitionNode] =
     definitions.as(Encoders.product[DefinitionNode])
-  def typedImportedSymbols: Dataset[ImportedSymbolNode] =
-    importedSymbols.as(Encoders.product[ImportedSymbolNode])
   def typedEdges: Dataset[EdgeRow] = edges.as(Encoders.product[EdgeRow])
 
   def registerViews(spark: SparkSession): Unit = {
@@ -110,34 +105,6 @@ final case class GraphStore(
 
 object GraphStore {
 
-  /** Bucketed write for co-located joins at scale: node tables bucketed by
-    * `id`, edges bucketed by `source_id`, so node-edge-node joins read
-    * pre-shuffled buckets and skip the exchange entirely. Requires a
-    * catalog (saveAsTable); `db` is created if missing. Bucket count should
-    * be sized so each bucket is 100-500 MB at the target scale.
-    */
-  def writeBucketed(spark: SparkSession, store: GraphStore, db: String,
-                    buckets: Int): Unit = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    // a fresh (in-memory) catalog may not know a table whose files survive
-    // from a previous session; drop + purge the location before writing
-    def fresh(df: DataFrame, name: String, bucketCol: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $db.$name")
-      val loc = spark.sql(s"DESCRIBE DATABASE $db")
-        .where(col("info_name") === "Location")
-        .select("info_value").head().getString(0).stripPrefix("file:")
-      deleteRecursively(java.nio.file.Paths.get(s"$loc/$name"))
-      df.write.mode("overwrite")
-        .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .saveAsTable(s"$db.$name")
-    }
-    fresh(store.directories, "directory_nodes", "id")
-    fresh(store.files, "file_nodes", "id")
-    fresh(store.definitions, "definition_nodes", "id")
-    fresh(store.importedSymbols, "imported_symbol_nodes", "id")
-    fresh(store.edges, "edges", "source_id")
-  }
-
   /** Link-SAFE recursive delete — the one shared implementation behind
     * store cleanup, workspace deletion and the CLI's `clean`. `Files.walk`
     * does not follow symlinks, so a symlinked directory inside the target
@@ -153,13 +120,6 @@ object GraphStore {
           .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
       } finally s.close()
     }
-
-  def readBucketed(spark: SparkSession, db: String): GraphStore = GraphStore(
-    directories = spark.table(s"$db.directory_nodes"),
-    files = spark.table(s"$db.file_nodes"),
-    definitions = spark.table(s"$db.definition_nodes"),
-    importedSymbols = spark.table(s"$db.imported_symbol_nodes"),
-    edges = spark.table(s"$db.edges"))
 
   /** Read a store previously written with [[GraphStore.write]]. */
   def read(spark: SparkSession, dir: String): GraphStore = GraphStore(

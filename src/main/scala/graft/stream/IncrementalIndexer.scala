@@ -15,10 +15,10 @@ import graft.store.GraphStore
   *
   *  - a change batch is a DataFrame of (changed_path, change_type);
   *  - deletion = anti-joins of the store against the changed-path set (M2);
-  *  - re-insert = re-running extraction/analysis on just the changed files and
-  *    unioning (M3) — at scale this is a dynamic-partition-overwrite keyed by
-  *    file_path, so ids stay natural keys and no MAX(id)+1 arithmetic is
-  *    needed (SURVEY §7.3);
+  *  - re-insert = re-running extraction/analysis on just the changed files
+  *    and merging on natural keys (M3): [[graft.analyze.IdRemapper.rebuild]]
+  *    assigns one fresh dense id space, and the caller rewrites the whole
+  *    store with [[graft.store.GraphStore.write]];
   *  - the streaming wrapper is `readStream` over a change-feed directory +
   *    `foreachBatch` applying the above, with the trigger interval playing the
   *    reference's debounce-window role (T1).
@@ -35,8 +35,8 @@ object IncrementalIndexer {
       .select(col("id").as("xid"))
     val keptFiles = store.files
       .join(doomed, store.files("id") === doomed("xid"), "left_anti")
-    val srcIsFile = col("kind").isin(EdgeKind.FileToDef, EdgeKind.FileToImp)
-    val dstIsFile = col("kind").isin(EdgeKind.DirToFile, EdgeKind.ImpToFile)
+    val srcIsFile = col("kind").isin(EdgeKind.withSource("file"): _*)
+    val dstIsFile = col("kind").isin(EdgeKind.withTarget("file"): _*)
     val keptEdges = store.edges
       .join(doomed.withColumnRenamed("xid", "sdel"),
         srcIsFile && col("source_id") === col("sdel"), "left_anti")
@@ -62,10 +62,10 @@ object IncrementalIndexer {
     val doomedImpIds = store.importedSymbols.join(cp,
       col("file_path") === col("changed_path"))
       .select(col("id").as("xid"))
-    val srcIsDef = col("kind").isin(EdgeKind.DefToDef, EdgeKind.DefToImp)
-    val dstIsDef = col("kind").isin(EdgeKind.FileToDef, EdgeKind.DefToDef, EdgeKind.ImpToDef)
-    val srcIsImp = col("kind").isin(EdgeKind.ImpToImp, EdgeKind.ImpToDef, EdgeKind.ImpToFile)
-    val dstIsImp = col("kind").isin(EdgeKind.FileToImp, EdgeKind.DefToImp, EdgeKind.ImpToImp)
+    val srcIsDef = col("kind").isin(EdgeKind.withSource("definition"): _*)
+    val dstIsDef = col("kind").isin(EdgeKind.withTarget("definition"): _*)
+    val srcIsImp = col("kind").isin(EdgeKind.withSource("imported_symbol"): _*)
+    val dstIsImp = col("kind").isin(EdgeKind.withTarget("imported_symbol"): _*)
     val keptEdges = base.edges
       .join(doomedDefIds.withColumnRenamed("xid", "d1"),
         srcIsDef && col("source_id") === col("d1"), "left_anti")
@@ -154,10 +154,14 @@ object IncrementalIndexer {
     * node-table merge + caller re-link + import recompute (the overload
     * above) → one [[graft.analyze.Indexer.resolveCallEdges]] pass of the
     * batch refs over the merged tables (typed JVM/Ruby + heuristic, with
-    * import-scoped cross-file candidates). JVM type FACTS of unchanged
-    * files are not persisted, so inheritance chains rooted in unchanged
-    * classes degrade to the defs-derived catalog — everything else is
-    * scratch-equal.
+    * import-scoped cross-file candidates). Two known gaps against a
+    * from-scratch index: JVM type FACTS of unchanged files are not
+    * persisted, so inheritance chains rooted in unchanged classes degrade
+    * to the defs-derived catalog; and an unchanged file's call edges are
+    * kept as resolved, so when the batch removes one of a call's
+    * candidates, its AMBIGUOUSLY_CALLS edge to the remaining one stays
+    * ambiguous where a fresh index says CALLS (ReindexScenarioSpec pins
+    * the one such row of the TypeScript script).
     */
   def applyReindexBatch(spark: org.apache.spark.sql.SparkSession,
       store: GraphStore, changedPaths: DataFrame,
@@ -190,33 +194,11 @@ object IncrementalIndexer {
         .distinct())
   }
 
-  /** M3 at scale — persist a reindex batch by rewriting ONLY the partitions
-    * of the changed files, via dynamic partition overwrite. Tables are laid
-    * out partitioned by a stable bucket of the owning file path
-    * (`fbucket = charFold(file) % nBuckets`), so a batch touching k files
-    * rewrites at most k buckets, not the whole table — the scalable
-    * replacement for the reference's DETACH DELETE + MAX(id)+1 re-insert
-    * (mutation/changes.rs:57-192). The dynamic mode is a per-write option:
-    * setting it on the session would leave every later `partitionBy`
-    * overwrite (e.g. `GraphStore.write`'s edge kinds) keeping stale
-    * partitions.
-    */
-  def overwriteChangedPartitions(fresh: GraphStore, dir: String,
-      nBuckets: Int = 256): Unit = {
-    def write(df: DataFrame, fileCol: String, table: String): Unit =
-      df.withColumn("fbucket", pmod(
-          graft.functions.TextFunctions.charFold(col(fileCol)), lit(nBuckets)))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("fbucket").parquet(s"$dir/$table")
-    write(fresh.definitions, "primary_file_path", "definition_nodes_bucketed")
-    write(fresh.importedSymbols, "file_path", "imported_symbol_nodes_bucketed")
-  }
-
   /** T1/T2 — continuous reindex loop: a file-source stream of change records
     * (json lines with changed_path/change_type), debounced by the trigger
     * interval, applied per micro-batch via `onBatch`. The caller's `onBatch`
-    * typically runs applyReindexBatch + GraphStore.write (dynamic partition
-    * overwrite keyed by file_path).
+    * typically runs applyReindexBatch and rewrites the store with
+    * GraphStore.write.
     */
   def start(spark: SparkSession, changeFeedDir: String,
             triggerMs: Long)(onBatch: (DataFrame, Long) => Unit): StreamingQuery = {

@@ -11,12 +11,13 @@ import graft.pipeline.CurationPipeline
 import graft.stream.{StreamingAnnIndex, StreamingCuration, StreamingSearchIndex}
 
 /** Every batch face that materializes intermediates — the composed
-  * pipeline, the stream admissions, the store admissions and compactions —
-  * leaves the session as it found it, on success and when the batch fails:
-  * no persisted RDD made by the call survives it, and the fragment registry
-  * is back to its pre-call size. A failure is injected through an input
-  * frame whose evaluation throws (for a compaction, which reads only the
-  * store: an unreadable data file in the table it rewrites).
+  * pipeline, the stream admissions, the store admissions and compactions,
+  * the graph index and the watcher's reindex — leaves the session as it
+  * found it, on success and when the batch fails: no persisted RDD made by
+  * the call survives it, and the fragment registry is back to its pre-call
+  * size. A failure is injected through an input frame whose evaluation
+  * throws (for a face that reads only a store: an unreadable data file in a
+  * table it reads; for the index: a store directory it cannot create).
   */
 class BatchLeakSpec extends SparkSpec {
   import spark.implicits._
@@ -225,5 +226,51 @@ class BatchLeakSpec extends SparkSpec {
       width = 64)
     assert(leakFree("CmStore.append")(cm.append(items, "b1")))
     failsLeakFree("CmStore.append")(cm.append(failing(items, "item"), "b2"))
+  }
+
+  /** A manager holding a one-project workspace of two Python files. */
+  private def workspace(): graft.serve.WorkspaceManager = {
+    val ws = Files.createTempDirectory("graft-leak-ws")
+    val proj = ws.resolve("svc")
+    Files.createDirectories(proj.resolve(".git"))
+    Files.writeString(proj.resolve("m.py"), "def first():\n    return 1\n")
+    Files.writeString(proj.resolve("n.py"),
+      "from m import first\n\ndef second():\n    return first()\n")
+    val mgr = new graft.serve.WorkspaceManager(spark, tmp("ws-data"),
+      new graft.serve.EventPublisher)
+    mgr.getOrRegister(ws.toString)
+    mgr
+  }
+
+  test("graph index: leak-free on success and failure") {
+    val mgr = workspace()
+    val state = mgr.list().head
+    val p = state.projects.head
+    leakFree("Indexer.indexTo")(graft.analyze.Indexer.indexTo(spark,
+      p.projectPath, "svc", mgr.storeDirFor(state, p)))
+    // the write fails after every checkpoint of the index is made
+    val blocker = Files.createTempFile("graft-leak-blocker", "")
+    failsLeakFree("Indexer.indexTo")(graft.analyze.Indexer.indexTo(spark,
+      p.projectPath, "svc", s"$blocker/store"))
+    mgr.shutdown()
+  }
+
+  test("watcher reindex batch: leak-free on success and failure") {
+    val mgr = workspace()
+    val state = mgr.list().head
+    val p = state.projects.head
+    val storeDir = mgr.storeDirFor(state, p)
+    graft.analyze.Indexer.indexTo(spark, p.projectPath, "svc", storeDir)
+    Files.writeString(Paths.get(p.projectPath, "m.py"),
+      "def first():\n    return 2\n\ndef third():\n    return 3\n")
+    val changes = Seq(("m.py", "modified")).toDF("changed_path", "change_type")
+    leakFree("reindexBatch")(mgr.reindexBatch(state, p, changes))
+    assert(GraphStore.read(spark, storeDir).definitions
+      .where(col("name") === "third").count() == 1)
+    // the batch parses the changed file before it reads the store
+    Files.write(Paths.get(storeDir, "definition_nodes",
+      "part-99999-corrupt.parquet"), "not a parquet file".getBytes)
+    failsLeakFree("reindexBatch")(mgr.reindexBatch(state, p, changes))
+    mgr.shutdown()
   }
 }

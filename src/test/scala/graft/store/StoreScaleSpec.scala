@@ -1,10 +1,9 @@
 package graft.store
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Scale-path mechanics: bucketed co-located joins and dynamic-partition
-  * overwrite for incremental persistence (SCALE.md).
+/** Scale-path mechanics over a small synthetic store: GraphX ranking, the
+  * shuffle-join closure path, and the typed resolvers' per-repo catalog.
   */
 class StoreScaleSpec extends SparkSpec {
 
@@ -28,75 +27,6 @@ class StoreScaleSpec extends SparkSpec {
         "python", "r", "py", s"f$i.py"))
         .toDF("id", "path", "absolute_path", "language", "repository_name",
           "extension", "name"))
-  }
-
-  test("bucketed store joins node-edge without a shuffle exchange") {
-    GraphStore.writeBucketed(spark, store, "graft_test_db", buckets = 4)
-    val b = GraphStore.readBucketed(spark, "graft_test_db")
-    val joined = b.definitions.join(b.edges,
-      b.definitions("id") === b.edges("source_id"))
-    assert(joined.count() == 99)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join should not shuffle:\n$plan")
-  }
-
-  test("bucketed store stays exchange-free at sf1 (14M-edge graph)") {
-    // the sf1 witness of the fixture-scale property above: regenerate the
-    // data with `runMain graft.tools.ScaleUp` if absent (bench-data/ is
-    // not tracked). SCALE.md round 8 "Bucketed graph store at sf1"
-    // measured the same layout: 0 exchanges, and the bucketed-from-disk
-    // join beating the cached store's shuffling join 3.8 s vs 7.2 s.
-    val sf1 = "/root/repo/bench-data/sf1"
-    assume(new java.io.File(s"$sf1/lineitem.parquet").isDirectory,
-      "sf1 bench data not generated")
-    val big = graft.SparkEntry.storeFor(spark, sf1)
-    GraphStore.writeBucketed(spark, big, "graft_sf1_db", buckets = 32)
-    val b = GraphStore.readBucketed(spark, "graft_sf1_db")
-    val joined = b.edges.join(
-      b.definitions.withColumnRenamed("id", "source_id"), "source_id")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"sf1 bucketed join should not shuffle:\n$plan")
-    assert(joined.count() > 0)
-  }
-
-  test("dynamic partition overwrite rewrites only changed file buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpo").toString
-    val nBuckets = 16
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val sessionMode = spark.conf.get(modeKey)
-    // initial full write
-    graft.stream.IncrementalIndexer.overwriteChangedPartitions(
-      store, dir, nBuckets)
-    val before = spark.read.parquet(s"$dir/definition_nodes_bucketed")
-    assert(before.count() == 100)
-    // "reindex" of a single file: defs of f3.py get new names
-    val fresh = store.copy(definitions = store.definitions
-      .where(col("primary_file_path") === "f3.py")
-      .withColumn("name", concat(col("name"), lit("_v2"))))
-    graft.stream.IncrementalIndexer.overwriteChangedPartitions(
-      fresh, dir, nBuckets)
-    // dynamic mode is per write: the shared session keeps its own mode
-    assert(spark.conf.get(modeKey) == sessionMode)
-    val after = spark.read.parquet(s"$dir/definition_nodes_bucketed")
-    // expectation derived with the same bucketing rule the writer uses
-    val changedBuckets = store.definitions
-      .where(col("primary_file_path") === "f3.py")
-      .select(pmod(graft.functions.TextFunctions.charFold(
-        col("primary_file_path")), lit(nBuckets)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val expected = store.definitions
-      .withColumn("b", pmod(graft.functions.TextFunctions.charFold(
-        col("primary_file_path")), lit(nBuckets)))
-      .where(!col("b").isin(changedBuckets.toSeq: _*))
-      .select("fqn").collect().map(_.getString(0)).toSet ++
-      fresh.definitions.select("fqn").collect().map(_.getString(0)).toSet
-    val got = after.select("fqn").collect().map(_.getString(0)).toSet
-    assert(got == expected)
-    // the changed file's defs carry the new names
-    assert(after.where(col("primary_file_path") === "f3.py" &&
-      col("name").endsWith("_v2")).count() == 10)
   }
 
   test("pagerank: module hubs rank above leaves") {
