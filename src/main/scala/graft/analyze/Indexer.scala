@@ -2,7 +2,6 @@ package graft.analyze
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.extract.{Extracted, Extractors, SourceFile}
 import graft.model.{EdgeKind, RelType}
 import graft.operators.BatchScope
@@ -11,16 +10,37 @@ import graft.store.GraphStore
 /** The indexing dataflow (SURVEY §3.1 stages 3-5 as one job DAG):
   * files → mapPartitions(parse) → relationship-derivation joins → GraphStore.
   *
+  * The analysis has two halves, split along what an edit invalidates:
+  * [[perFile]] derives what depends only on one file's own content, and
+  * [[wholeTree]] derives what depends on the whole tree. A full index runs
+  * them in sequence; an incremental reindex runs the per-file half on the
+  * changed files only and the whole-tree half once over the merged store.
+  *
   * Scale shape: extraction is per-file map work; every join downstream is an
   * equi-join keyed by file path or natural key; nothing is collected to the
-  * driver. Id assignment (dense, deterministic) happens once at the end, only
-  * because the reference's store (and GraphX) wants integer ids — all
+  * driver. Id assignment (dense, deterministic) happens once per node table,
+  * only because the reference's store (and GraphX) wants integer ids — all
   * derivation joins run on natural keys.
   */
 object Indexer {
 
   final case class FileMeta(path: String, absolutePath: String,
       repositoryName: String, name: String, extension: String, language: String)
+
+  /** The edge kinds [[wholeTree]] derives from the whole store: directory
+    * containment and import resolution. Every other kind is either
+    * per-file or a call edge of the references it resolves.
+    */
+  private[graft] val WholeTreeKinds: Seq[String] = Seq(EdgeKind.DirToDir,
+    EdgeKind.DirToFile, EdgeKind.ImpToImp, EdgeKind.ImpToDef, EdgeKind.ImpToFile)
+
+  private val nulls = Seq(
+    lit(null).cast("long").as("source_start_byte"),
+    lit(null).cast("long").as("source_end_byte"),
+    lit(null).cast("int").as("source_start_line"),
+    lit(null).cast("int").as("source_end_line"),
+    lit(null).cast("int").as("source_start_col"),
+    lit(null).cast("int").as("source_end_col"))
 
   def index(spark: SparkSession, files: Dataset[SourceFile]): GraphStore = {
     val (fileMeta, rawDefs, rawImps, rawRefs, rawFacts) =
@@ -30,9 +50,8 @@ object Indexer {
 
   /** E1-E3 alone: per-file extraction (pure map; content never shuffled) to
     * the five parsed tables (fileMeta, defs, imports, references, type
-    * facts) — the [[fromParsed]] input contract. Exposed so the incremental
-    * path can re-extract a change batch and resolve its references against
-    * the MERGED graph rather than the batch alone.
+    * facts) — the [[fromParsed]] input contract. The incremental path
+    * extracts a change batch with it, then runs the two analysis halves.
     */
   def extractTables(spark: SparkSession, files: Dataset[SourceFile])
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -77,18 +96,15 @@ object Indexer {
     */
   def fromParsed(spark: SparkSession, fileMeta: DataFrame, rawDefs: DataFrame,
                  rawImps: DataFrame, rawRefs: DataFrame,
-                 rawFacts: DataFrame): GraphStore = {
+                 rawFacts: DataFrame): GraphStore =
+    wholeTree(spark, perFile(spark, fileMeta, rawDefs, rawImps), rawRefs, rawFacts)
 
-    // ---- A2: directory hierarchy --------------------------------------
-    val dirPaths = Analyzer.deriveDirectories(fileMeta)
-    val dirNodes = BatchScope.localCheckpoint(Analyzer.assignIds(
-      dirPaths.select("path", "parent_path", "name"),
-      Seq("path"))) // reused by several edge branches
-    val repoName = lit(fileMeta.select("repositoryName").head(1)
-      .headOption.map(_.getString(0)).getOrElse("repo"))
-    val directories = dirNodes.select(col("id"), col("path"),
-      col("path").as("absolute_path"), repoName.as("repository_name"), col("name"))
-
+  /** The per-file half: file nodes, A3 definitions, A4 imported symbols,
+    * FILE_TO_DEF, FILE_TO_IMP and A5 nesting. Each row depends only on one
+    * file's own content. The store it returns has no directories.
+    */
+  private[graft] def perFile(spark: SparkSession, fileMeta: DataFrame,
+      rawDefs: DataFrame, rawImps: DataFrame): GraphStore = {
     // ---- file nodes ----------------------------------------------------
     val fileNodes = BatchScope.localCheckpoint(
       Analyzer.assignIds(fileMeta, Seq("path")))
@@ -119,18 +135,6 @@ object Indexer {
       col("startCol").as("start_col"), col("endCol").as("end_col"))
 
     // ---------------- edges ----------------
-    val nulls = Seq(
-      lit(null).cast("long").as("source_start_byte"),
-      lit(null).cast("long").as("source_end_byte"),
-      lit(null).cast("int").as("source_start_line"),
-      lit(null).cast("int").as("source_end_line"),
-      lit(null).cast("int").as("source_start_col"),
-      lit(null).cast("int").as("source_end_col"))
-
-    val dirEdges = Analyzer.directoryEdges(dirPaths,
-      dirNodes.select("path", "id"), fileNodes.select("path", "id"))
-      .select(col("*") +: nulls: _*)
-
     val fileIds = fileNodes.select(col("path").as("fpath"), col("id").as("file_id"))
 
     val fileDefines = definitions.join(fileIds,
@@ -186,55 +190,78 @@ object Indexer {
         .select(col("*") +: nulls: _*)
     }
 
-    // ---- A6: import resolution (Python candidate paths + re-exports) ---
-    val importEdges = PythonResolver.resolveImports(
-      importedSymbols, filesDf, definitions).select(col("*") +: nulls: _*)
-
-    // ---- A7: reference (call) resolution -------------------------------
-    val callEdges = resolveCallEdges(spark, fileMeta, rawRefs, rawFacts,
-      definitions, importedSymbols, filesDf, importEdges)
-
-    val edges = Seq(dirEdges, fileDefines, fileImports, nestingEdges,
-      importEdges, callEdges).reduce(_.unionByName(_))
-
-    GraphStore(directories, filesDf, definitions, importedSymbols, edges)
+    GraphStore(noDirectories(spark), filesDf, definitions, importedSymbols,
+      Seq(fileDefines, fileImports, nestingEdges).reduce(_.unionByName(_)))
   }
 
-  /** A7 as a standalone stage: resolve `rawRefs` (with their `rawFacts`)
-    * against node tables that may span MORE files than the refs do — the
-    * contract the incremental path needs, where only the changed files'
-    * refs exist but resolution must see the whole merged graph (a call in a
-    * changed file targeting an unchanged file's definition resolves exactly
-    * as a from-scratch index would). Typed (JVM + Ruby) resolution takes
-    * per-site precedence; the heuristic name-match pass gets the remainder
-    * with import-scoped cross-file candidates.
-    *
-    * Returns the unioned call-edge set (typed + heuristic), edge schema.
+  /** `s` without what [[wholeTree]] derives: no directories and no edge of
+    * [[WholeTreeKinds]]. The directories are an empty local table, so
+    * merging them runs no Spark job.
     */
-  def resolveCallEdges(spark: SparkSession, fileMeta: DataFrame,
-      rawRefs: DataFrame, rawFacts: DataFrame, definitions: DataFrame,
-      importedSymbols: DataFrame, filesDf: DataFrame,
-      importEdges: DataFrame): DataFrame = {
+  private[graft] def withoutWholeTree(spark: SparkSession, s: GraphStore): GraphStore =
+    s.copy(directories = noDirectories(spark),
+      edges = s.edges.where(!col("kind").isin(WholeTreeKinds: _*)))
+
+  private def noDirectories(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      graft.model.Schemas.directoryNodes)
+
+  /** The whole-tree half over `store`: A2 directories and DIR_* edges from
+    * its files table, A6 import edges over its node tables, and A7 call
+    * edges for `rawRefs` (with their `rawFacts`), which may cover fewer
+    * files than the store does: a call from a changed file into an
+    * unchanged file's definition resolves as a full index resolves it.
+    * Typed (JVM + Ruby) resolution takes per-site precedence; the heuristic
+    * name-match pass gets the remainder with import-scoped cross-file
+    * candidates. The directories and [[WholeTreeKinds]] edges `store` held
+    * are replaced; the call edges are appended to its other edges.
+    */
+  private[graft] def wholeTree(spark: SparkSession, store: GraphStore,
+      rawRefs: DataFrame, rawFacts: DataFrame): GraphStore = {
+    val files = store.files
+
+    // ---- A2: directory hierarchy --------------------------------------
+    val dirPaths = Analyzer.deriveDirectories(files)
+    val dirNodes = BatchScope.localCheckpoint(Analyzer.assignIds(
+      dirPaths.select("path", "parent_path", "name"),
+      Seq("path"))) // reused by several edge branches
+    val repoName = lit(files.select("repository_name").head(1)
+      .headOption.map(_.getString(0)).getOrElse("repo"))
+    val directories = dirNodes.select(col("id"), col("path"),
+      col("path").as("absolute_path"), repoName.as("repository_name"), col("name"))
+    val dirEdges = Analyzer.directoryEdges(dirPaths,
+      dirNodes.select("path", "id"), files.select("path", "id"))
+      .select(col("*") +: nulls: _*)
+
+    // ---- A6: import resolution (Python candidate paths + re-exports) ---
+    val importEdges = PythonResolver.resolveImports(
+      store.importedSymbols, files, store.definitions).select(col("*") +: nulls: _*)
+
+    // ---- A7: reference (call) resolution -------------------------------
     // (from_file, to_file) via resolved IMP_TO_FILE edges: enables the
     // import-scoped cross-file candidate lookup
     val importedFiles = importEdges.where(col("kind") === EdgeKind.ImpToFile)
-      .join(importedSymbols.select(col("id").as("if_imp"),
+      .join(store.importedSymbols.select(col("id").as("if_imp"),
         col("file_path").as("from_file")), col("source_id") === col("if_imp"))
-      .join(filesDf.select(col("id").as("if_file"), col("path").as("to_file")),
+      .join(files.select(col("id").as("if_file"), col("path").as("to_file")),
         col("target_id") === col("if_file"))
       .select("from_file", "to_file").distinct()
-
     // A7+: type-directed resolution for JVM languages and Ruby; resolved
     // sites take precedence — the heuristic pass only sees the remainder
+    val fileMeta = files.select(col("path"),
+      col("repository_name").as("repositoryName"), col("language"))
     val (typedEdges, typedSites) = TypedResolver.resolve(spark, fileMeta,
-      rawFacts, rawRefs, definitions, importedSymbols)
+      rawFacts, rawRefs, store.definitions, store.importedSymbols)
     val (rubyEdges, rubySites) = RubyTypedResolver.resolve(spark, fileMeta,
-      rawFacts, rawRefs, definitions)
+      rawFacts, rawRefs, store.definitions)
     val remainingRefs = rawRefs.join(typedSites.unionByName(rubySites),
       Seq("filePath", "startByte", "endByte"), "left_anti")
-    val callEdges = ReferenceResolver.resolve(remainingRefs, definitions,
-      importedSymbols, Some(importedFiles))
-    Seq(callEdges, typedEdges, rubyEdges).reduce(_.unionByName(_))
+    val callEdges = ReferenceResolver.resolve(remainingRefs, store.definitions,
+      store.importedSymbols, Some(importedFiles))
+
+    store.copy(directories = directories, edges = Seq(dirEdges,
+      withoutWholeTree(spark, store).edges, importEdges, callEdges, typedEdges,
+      rubyEdges).reduce(_.unionByName(_)))
   }
 
   /** Convenience: scan a local directory and index it. */

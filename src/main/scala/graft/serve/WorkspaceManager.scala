@@ -249,7 +249,8 @@ final class WorkspaceManager(spark: SparkSession, val dataDir: String,
           p.projectPath, Paths.get(p.projectPath).getFileName.toString,
           surviving)
         val merged = graft.stream.IncrementalIndexer.applyReindexBatch(spark,
-          graft.store.GraphStore.read(spark, storeDir), batch, freshFiles)
+          graft.store.GraphStore.read(spark, storeDir),
+          rows.map(_.getString(0)).toSeq, freshFiles)
         // cut lineage back to the store being overwritten before the
         // overwrite (each checkpoint materializes its table)
         merged.copy(

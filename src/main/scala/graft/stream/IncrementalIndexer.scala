@@ -1,24 +1,29 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.model.{EdgeKind, RelType}
+import graft.analyze.{IdRemapper, Indexer}
+import graft.extract.SourceFile
+import graft.model.EdgeKind
 import graft.store.GraphStore
 
 /** Incremental maintenance (SURVEY §2.5 M1-M3, §2.6 T1-T2).
   *
   * The reference watches the filesystem, debounces events per project, and
   * re-indexes changed files by DETACH-deleting the affected subgraph and
-  * re-inserting fresh rows (http-server-desktop/src/watcher.rs:440-600;
+  * re-inserting fresh rows with the analyzer a full index uses
+  * (http-server-desktop/src/watcher.rs:440-600;
   * indexer/src/mutation/changes.rs:53-260). Here:
   *
-  *  - a change batch is a DataFrame of (changed_path, change_type);
+  *  - a change batch is the list of changed paths;
   *  - deletion = anti-joins of the store against the changed-path set (M2);
-  *  - re-insert = re-running extraction/analysis on just the changed files
-  *    and merging on natural keys (M3): [[graft.analyze.IdRemapper.rebuild]]
-  *    assigns one fresh dense id space, and the caller rewrites the whole
-  *    store with [[graft.store.GraphStore.write]];
+  *  - re-insert (M3) = the analysis a full index runs, split in its two
+  *    halves: [[graft.analyze.Indexer.perFile]] on the changed files only,
+  *    [[graft.analyze.IdRemapper.rebuild]] to merge them with the surviving
+  *    per-file tables on natural keys, and
+  *    [[graft.analyze.Indexer.wholeTree]] once over the merged store; the
+  *    caller rewrites the whole store with [[graft.store.GraphStore.write]];
   *  - the streaming wrapper is `readStream` over a change-feed directory +
   *    `foreachBatch` applying the above, with the trigger interval playing the
   *    reference's debounce-window role (T1).
@@ -78,18 +83,36 @@ object IncrementalIndexer {
     base.copy(definitions = keptDefs, importedSymbols = keptImps, edges = keptEdges)
   }
 
-  /** M3 — apply a reindex batch: delete the changed files' subgraph, then
-    * merge in the freshly analyzed replacement store (built by re-running the
-    * extract/analyze pipeline on just those files).
+  /** M3 — apply a reindex batch. `changedPaths` lists every changed path,
+    * deleted ones included; `files` holds the surviving ones. Four steps:
+    *  1. extract `files`;
+    *  2. run the per-file half of the analysis on them;
+    *  3. cascade-delete the changed paths from the store, merge what is
+    *     left of its per-file tables with the fresh ones into one new dense
+    *     id space, and relink the unchanged callers of changed files;
+    *  4. run the whole-tree half once over the merged store with the
+    *     batch's references: directories and import edges are derived from
+    *     the merged tables, and the batch's calls resolve against the whole
+    *     graph, as a full index resolves them.
     *
-    * The surviving store and the fresh store carry unrelated dense-id
-    * spaces (the fresh one starts at 0), so a plain union would collide
-    * ids; [[graft.analyze.IdRemapper.rebuild]] merges on natural keys and
-    * assigns one new id space, remapping all edges.
+    * Two known gaps against a full index, both in the call edges of
+    * unchanged files, which are kept as they were resolved (re-resolving
+    * them would need their type facts, which the store does not hold):
+    * inheritance chains rooted in an unchanged JVM class degrade to the
+    * definitions-derived catalog for the batch's calls; and when the batch
+    * removes one of an unchanged call's candidates, its AMBIGUOUSLY_CALLS
+    * edge to the remaining one stays where a full index says CALLS
+    * (ReindexScenarioSpec pins the one such row of the TypeScript script).
     */
-  def applyReindexBatch(store: GraphStore, changedPaths: DataFrame,
-                        fresh: GraphStore): GraphStore = {
-    val deleted = applyCascadingDeletes(store, changedPaths)
+  def applyReindexBatch(spark: SparkSession, store: GraphStore,
+      changedPaths: Seq[String], files: Dataset[SourceFile]): GraphStore = {
+    import spark.implicits._
+    val changed = changedPaths.toDF("changed_path")
+    val (fileMeta, rawDefs, rawImps, rawRefs, rawFacts) =
+      Indexer.extractTables(spark, files)
+    val fresh = Indexer.perFile(spark, fileMeta, rawDefs, rawImps)
+    val merged = IdRemapper.rebuild(Seq(
+      Indexer.withoutWholeTree(spark, applyCascadingDeletes(store, changed)), fresh))
     // Call edges from SURVIVING callers into changed-file definitions are
     // cascade-deleted with their targets, but the caller's source code did
     // not change — its call still targets the NAME. Re-link those edges to
@@ -98,39 +121,19 @@ object IncrementalIndexer {
     // match). Re-linking is exactly what the from-scratch index would have
     // derived for the unchanged caller; edges whose target fqn no longer
     // exists stay deleted.
-    val cp0 = changedPaths.select(col("changed_path"))
     val defK = store.definitions.select(col("id").as("dk_id"),
       col("primary_file_path").as("dk_file"), col("fqn").as("dk_fqn"))
-    val relinkKeyed = store.edges
+    val mergedK = merged.definitions.select(col("id").as("m_id"),
+      col("primary_file_path").as("m_file"), col("fqn").as("m_fqn"))
+    val relinked = store.edges
       .where(col("kind") === EdgeKind.DefToDef)
       .join(defK.select(col("dk_id").as("s_id"), col("dk_file").as("src_file"),
         col("dk_fqn").as("src_fqn")), col("source_id") === col("s_id"))
-      .join(cp0, col("src_file") === col("changed_path"), "left_anti")
+      .join(changed, col("src_file") === col("changed_path"), "left_anti")
       .join(defK.select(col("dk_id").as("t_id"), col("dk_file").as("dst_file"),
         col("dk_fqn").as("dst_fqn")), col("target_id") === col("t_id"))
-      .join(cp0, col("dst_file") === col("changed_path"), "left_semi")
+      .join(changed, col("dst_file") === col("changed_path"), "left_semi")
       .drop("s_id", "t_id", "source_id", "target_id")
-    // Cross-file edges (import resolution, IMP_TO_*) depend on files OUTSIDE
-    // the changed set — a fresh per-file analysis can't see resolution
-    // targets in unchanged files, and unchanged imports may now resolve into
-    // the changed file. Drop the whole family and recompute it over the
-    // merged node tables (a deterministic function of them; same joins the
-    // full index runs — A6 is cheap relative to parsing).
-    val crossFileKinds = Seq(EdgeKind.ImpToImp, EdgeKind.ImpToDef, EdgeKind.ImpToFile)
-    def dropCrossFile(s: GraphStore) =
-      s.copy(edges = s.edges.where(!col("kind").isin(crossFileKinds: _*)))
-    val merged = graft.analyze.IdRemapper.rebuild(
-      Seq(dropCrossFile(deleted), dropCrossFile(fresh)))
-    val nulls = Seq("source_start_byte", "source_end_byte").map(c =>
-      lit(null).cast("long").as(c)) ++
-      Seq("source_start_line", "source_end_line", "source_start_col",
-        "source_end_col").map(c => lit(null).cast("int").as(c))
-    val importEdges = graft.analyze.PythonResolver.resolveImports(
-        merged.importedSymbols, merged.files, merged.definitions)
-      .select(col("*") +: nulls: _*)
-    val mergedK = merged.definitions.select(col("id").as("m_id"),
-      col("primary_file_path").as("m_file"), col("fqn").as("m_fqn"))
-    val relinked = relinkKeyed
       .join(mergedK.select(col("m_id").as("source_id"), col("m_file").as("sf"),
         col("m_fqn").as("sq")), col("src_file") === col("sf") &&
           col("src_fqn") === col("sq"))
@@ -138,60 +141,8 @@ object IncrementalIndexer {
         col("m_fqn").as("tq")), col("dst_file") === col("tf") &&
           col("dst_fqn") === col("tq"))
       .select(graft.model.Schemas.edges.fieldNames.map(col).toIndexedSeq: _*)
-    merged.copy(edges = merged.edges.unionByName(relinked)
-      .unionByName(importEdges).distinct())
-  }
-
-  /** M3, file-based face — the complete incremental contract: re-extract
-    * the changed files and resolve their references against the MERGED
-    * graph, not the batch alone. The store-based overload above can only
-    * resolve batch refs within the batch (a GraphStore carries no raw
-    * refs), so a call from a changed file into an UNCHANGED file's
-    * definition — `main.rb` newly calling `UserModel.create` — would be
-    * lost there; here it resolves exactly as a from-scratch index would.
-    *
-    * Shape: extract batch → batch-local index WITHOUT its call edges →
-    * node-table merge + caller re-link + import recompute (the overload
-    * above) → one [[graft.analyze.Indexer.resolveCallEdges]] pass of the
-    * batch refs over the merged tables (typed JVM/Ruby + heuristic, with
-    * import-scoped cross-file candidates). Two known gaps against a
-    * from-scratch index: JVM type FACTS of unchanged files are not
-    * persisted, so inheritance chains rooted in unchanged classes degrade
-    * to the defs-derived catalog; and an unchanged file's call edges are
-    * kept as resolved, so when the batch removes one of a call's
-    * candidates, its AMBIGUOUSLY_CALLS edge to the remaining one stays
-    * ambiguous where a fresh index says CALLS (ReindexScenarioSpec pins
-    * the one such row of the TypeScript script).
-    */
-  def applyReindexBatch(spark: org.apache.spark.sql.SparkSession,
-      store: GraphStore, changedPaths: DataFrame,
-      freshFiles: org.apache.spark.sql.Dataset[graft.extract.SourceFile])
-      : GraphStore = {
-    val (fm, rawDefs, rawImps, rawRefs, rawFacts) =
-      graft.analyze.Indexer.extractTables(spark, freshFiles)
-    val freshFull = graft.analyze.Indexer.fromParsed(
-      spark, fm, rawDefs, rawImps, rawRefs, rawFacts)
-    // drop the batch-local call resolution: it is recomputed below against
-    // the merged world (batch-local answers can differ — a name unique in
-    // the batch may be ambiguous globally). Nesting DEF_TO_DEF edges stay.
-    val callTypes = Seq(RelType.Calls, RelType.AmbiguouslyCalls,
-      RelType.PropertyReference)
-    val fresh = freshFull.copy(edges = freshFull.edges.where(
-      !(col("kind") === EdgeKind.DefToDef && col("type").isin(callTypes: _*)) &&
-        col("kind") =!= EdgeKind.DefToImp))
-    val merged = applyReindexBatch(store, changedPaths, fresh)
-    val mergedFileMeta = merged.files.select(col("path"),
-      col("absolute_path").as("absolutePath"),
-      col("repository_name").as("repositoryName"),
-      col("name"), col("extension"), col("language"))
-    val callEdges = graft.analyze.Indexer.resolveCallEdges(spark,
-      mergedFileMeta, rawRefs, rawFacts, merged.definitions,
-      merged.importedSymbols, merged.files,
-      merged.edges.where(col("kind").isin(
-        EdgeKind.ImpToImp, EdgeKind.ImpToDef, EdgeKind.ImpToFile)))
-    merged.copy(edges =
-      merged.edges.unionByName(callEdges, allowMissingColumns = true)
-        .distinct())
+    Indexer.wholeTree(spark,
+      merged.copy(edges = merged.edges.unionByName(relinked)), rawRefs, rawFacts)
   }
 
   /** T1/T2 — continuous reindex loop: a file-source stream of change records

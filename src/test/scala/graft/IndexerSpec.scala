@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.analyze.{Indexer, PythonResolver}
 import graft.model.{EdgeKind, RelType}
@@ -203,8 +204,8 @@ class IndexerSpec extends SparkSpec {
     // re-add a fresh analysis of the changed file → counts restored
     val freshFiles = graft.extract.FileScanner.scan(spark, fixtureDir.toString, "fixture")
       .filter(_.path == "app/services.py")
-    val fresh = Indexer.index(spark, freshFiles)
-    val merged = IncrementalIndexer.applyReindexBatch(store, changed, fresh)
+    val merged = IncrementalIndexer.applyReindexBatch(spark, store,
+      Seq("app/services.py"), freshFiles)
     assert(merged.files.count() == 4)
     assert(merged.definitions.where(col("fqn") === "auth").count() == 1)
     // id spaces must be rebuilt, not collided: ids dense + unique per table
@@ -225,6 +226,38 @@ class IndexerSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap ==
       full.edges.groupBy("kind").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    // the file did not change, so the result is the original store: every
+    // table by natural key, each row as often as the original holds it
+    def byKey(g: graft.store.GraphStore) = Seq(
+      g.directories.drop("id"), g.files.drop("id"), g.definitions.drop("id"),
+      g.importedSymbols.drop("id"), graft.analyze.IdRemapper.edgesWithNaturalKeys(g)
+    ).map(_.collect().toSeq.groupMapReduce(_.toSeq)(_ => 1)(_ + _))
+    assert(byKey(merged) == byKey(store))
+  }
+
+  test("two indexes of one tree write byte-identical edge files") {
+    def edgeFiles(dir: Path): Map[String, Array[Byte]] = {
+      val s = Files.walk(dir.resolve("edges"))
+      try s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .map { f =>
+          // pair files by kind partition and part number: the rest of the
+          // name is the write job's random id
+          val part = f.getFileName.toString.split("-").take(2).mkString("-")
+          s"${f.getParent.getFileName}/$part" -> Files.readAllBytes(f)
+        }.toMap
+      finally s.close()
+    }
+    // 24 files: enough rows that an unsorted writer's order varies
+    val tree = Files.createTempDirectory("graft-repro-tree")
+    graft.extract.SyntheticTree.generate(tree, 24)
+    val Seq(a, b) = Seq.fill(2) {
+      val out = Files.createTempDirectory("graft-repro")
+      Indexer.indexTo(spark, tree.toString, "repro", out.toString)
+      edgeFiles(out)
+    }
+    assert(a.keySet == b.keySet && a.keySet.exists(_.startsWith("kind=")))
+    val differing = a.keySet.filterNot(k => java.util.Arrays.equals(a(k), b(k)))
+    assert(differing.isEmpty, differing.mkString(", "))
   }
 
   test("graphx bridge: khop + degrees") {

@@ -319,12 +319,11 @@ class ReferenceFixturesSpec extends SparkSpec {
 
     import spark.implicits._
     val changed = Seq("app/models/base_model.rb", "app/utils/string_utils.rb",
-      "app/models/user_model.rb").toDF("changed_path")
+      "app/models/user_model.rb")
     val freshFiles = graft.extract.FileScanner
       .scan(spark, repo.toString, "test-repo")
-      .filter(f => Seq("app/models/base_model.rb", "app/utils/string_utils.rb",
-        "app/models/user_model.rb").contains(f.path))
-    // the file-based face: batch refs re-resolved against the MERGED graph
+      .filter(f => changed.contains(f.path))
+    // batch refs resolve against the MERGED graph
     val merged = graft.stream.IncrementalIndexer
       .applyReindexBatch(spark, before, changed, freshFiles)
 

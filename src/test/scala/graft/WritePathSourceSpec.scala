@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard for the indexing write path: its checkpoints belong to the
   * enclosing batch (freed when the batch ends, not left to the
-  * ContextCleaner), and the store has one layout, the one
-  * [[graft.store.GraphStore.write]] writes and `read` reads.
+  * ContextCleaner), the store has one layout, the one
+  * [[graft.store.GraphStore.write]] writes and `read` reads, and index and
+  * reindex run one analysis.
   */
 class WritePathSourceSpec extends AnyFunSuite {
 
@@ -34,5 +35,29 @@ class WritePathSourceSpec extends AnyFunSuite {
         .flatMap(p => layout.findAllIn(Files.readString(p)).map(h => s"$p: $h"))
       finally s.close()
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("reindex runs the indexer's analysis, through one face") {
+    val src = source("src/main/scala/graft/stream/IncrementalIndexer.scala")
+    val analysis = """\b(PythonResolver|TypedResolver|RubyTypedResolver|""" +
+      """ReferenceResolver|resolveCallEdges|RelType)\b"""
+    assert(analysis.r.findAllIn(src).toList.isEmpty)
+    assert("""\bdef applyReindexBatch\b""".r.findAllIn(src).size == 1)
+  }
+
+  test("the whole-tree edge kinds are listed once in src/main") {
+    // a list of two or more directory or import-resolution kinds, outside
+    // EdgeKind's own census of every kind
+    val list = """(?:EdgeKind\.)?(?:Dir|Imp)To\w+\s*,\s*(?:EdgeKind\.)?(?:Dir|Imp)To\w+""".r
+    val s = Files.walk(Paths.get("src/main"))
+    val hits =
+      try s.iterator.asScala.filter(p => p.toString.endsWith(".scala") &&
+          !p.endsWith("model/Schemas.scala")).toList
+        .filter(p => list.findFirstIn(Files.readString(p)).nonEmpty)
+        .map(_.toString)
+      finally s.close()
+    assert(hits == List("src/main/scala/graft/analyze/Indexer.scala"))
+    val indexer = source("src/main/scala/graft/analyze/Indexer.scala")
+    assert("""\bSeq\((?:EdgeKind\.)?(?:Dir|Imp)To""".r.findAllIn(indexer).size == 1)
   }
 }

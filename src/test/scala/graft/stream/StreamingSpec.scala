@@ -80,15 +80,14 @@ class StreamingSpec extends SparkSpec {
     assert(window.head.toSet === Set(
       "a.py" -> "modified", "c.py" -> "added", "b.py" -> "deleted"))
     // the window drives the real M1-M3 path: the merged graph reflects the edit
-    val changed = spark.createDataFrame(
-      window.head.map { case (p, t) => (p, t) }).toDF("changed_path", "change_type")
     val survivingPaths = window.head.collect {
       case (p, t) if t != "deleted" => p
     }.toSet
     val freshFiles = graft.extract.FileScanner
       .scan(spark, repo.toString, "watch-repo")
       .filter(f => survivingPaths.contains(f.path))
-    store = IncrementalIndexer.applyReindexBatch(spark, store, changed, freshFiles)
+    store = IncrementalIndexer.applyReindexBatch(spark, store,
+      window.head.map(_._1), freshFiles)
     val names = store.definitions.select("name").collect().map(_.getString(0)).toSet
     assert(names.contains("alpha_new") && names.contains("gamma"))
     assert(!names.contains("beta"))
